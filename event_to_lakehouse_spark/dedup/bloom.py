@@ -69,6 +69,36 @@ def bloom_bits(n_keys: int, bits_per_key: int = BITS_PER_KEY) -> int:
     return max(_WORD, ((m + _WORD - 1) // _WORD) * _WORD)
 
 
+def _bit_rows(
+    keys: DataFrame,
+    col: str,
+    m_bits: int,
+    k: int = K_HASHES,
+) -> DataFrame:
+    """``(word_idx, word)`` with one set bit per row: k rows per key,
+    one per position hash (codegen expressions, never Python)."""
+    pos = keys.select(
+        F.explode(
+            F.array(
+                *[
+                    F.expr(f"{seeded_hash_spark(i, col)} % {m_bits}")
+                    for i in range(k)
+                ]
+            )
+        ).alias("p")
+    )
+    return pos.select(
+        (F.col("p") / _WORD).cast("bigint").alias("word_idx"),
+        F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST(p % {_WORD} AS INT))").alias(
+            "word"
+        ),
+    )
+
+
+def _or_words(bits: DataFrame) -> DataFrame:
+    return bits.groupBy("word_idx").agg(F.expr("bit_or(word)").alias("word"))
+
+
 def build_bloom(
     keys: DataFrame,
     col: str,
@@ -82,21 +112,7 @@ def build_bloom(
     (≪ key cardinality), with map-side partial ``bit_or``; the k
     position hashes are codegen expressions, never Python.
     """
-    pos = keys.select(
-        F.explode(
-            F.array(
-                *[
-                    F.expr(f"{seeded_hash_spark(i, col)} % {m_bits}")
-                    for i in range(k)
-                ]
-            )
-        ).alias("p")
-    )
-    return pos.groupBy((F.col("p") / _WORD).cast("bigint").alias("word_idx")).agg(
-        F.expr(f"bit_or(shiftleft(CAST(1 AS BIGINT), CAST(p % {_WORD} AS INT)))").alias(
-            "word"
-        )
-    )
+    return _or_words(_bit_rows(keys, col, m_bits, k))
 
 
 def bloom_maybe(
@@ -248,9 +264,11 @@ class BloomIndex:
         ``add_batch`` makes the loser collide and re-merge instead of
         silently dropping the winner's bits — which would manufacture
         Bloom FALSE NEGATIVES and break the no-false-negative contract
-        (ADVICE r9). The batch's own words are built once; only the
-        (metadata-scale) merge and manifest write retry."""
-        batch_words = build_bloom(keys, col, self.m_bits, self.k)
+        (ADVICE r9). The batch's single-bit rows and the held words
+        meet in ONE ``bit_or`` aggregate — the same bitmap as building
+        the batch's words first and merging them, with one exchange
+        instead of two."""
+        batch_bits = _bit_rows(keys, col, self.m_bits, self.k)
         for _ in range(max_retries):
             parent = self.table.snapshot()
             if (
@@ -259,14 +277,10 @@ class BloomIndex:
                 and batch_token in parent.batch_tokens
             ):
                 return parent  # replayed batch: bitmap already holds it
-            words = batch_words
+            bits = batch_bits
             if parent is not None:
-                words = (
-                    self.table.read(parent.version)
-                    .unionByName(batch_words)
-                    .groupBy("word_idx")
-                    .agg(F.expr("bit_or(word)").alias("word"))
-                )
+                bits = self.table.read(parent.version).unionByName(bits)
+            words = _or_words(bits)
             try:
                 return self.table.overwrite(
                     words,
@@ -296,9 +310,9 @@ class BloomIndex:
         return bloom_maybe(df, col, held, self.m_bits, self.k)
 
     def word_count(self) -> int:
-        """Bitmap rows held — metadata-scale (≤ m_bits/32)."""
-        held = self._stored()
-        return 0 if held is None else held.count()
+        """Bitmap rows held (≤ m_bits/32), from the manifest row stats
+        (no Spark job)."""
+        return self.table.row_count()
 
     def rebuild_from(
         self, keys: DataFrame, col: str, batch_token: str | None = None

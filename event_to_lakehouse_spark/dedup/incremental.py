@@ -26,8 +26,9 @@ against them:
    bucket (the semi-filtered index retains every row of a probed
    bucket, so counts equal full-recompute counts),
 4. candidate pairs = bucket join where at least one side is new;
-   signatures for scoring come from one signature-store scan with the
-   (small) pair set broadcast,
+   signatures for scoring are the batch's own plus one signature-store
+   scan semi-probed by the pairs' held member ids (broadcast), and
+   that batch-scale set is broadcast once for both pair sides,
 5. the batch's band rows + signatures are appended with an optional
    ``batch_token`` (replays are storage no-ops and return the same
    pairs — the batch's own indexed copy never self-pairs).
@@ -53,7 +54,7 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..storage.snapshots import SnapshotTable
@@ -144,17 +145,20 @@ class NearDupIndex:
         """Probe ``docs`` against the index, append their keys, return
         (doc_id_a, doc_id_b, jaccard_est) pairs where at least one side
         is in this batch. See module docstring for the plan shape."""
-        from pyspark import StorageLevel
-
+        # The batch's signatures feed the band rows, the probe, the
+        # scoring and the append: checkpoint them once. Unlike a cached
+        # scan, a checkpointed one lets the scoring's two broadcast
+        # builds of the same frame be one reused exchange, and there is
+        # no persist() to release.
         new_sigs = signatures(
             docs, self.text_col, self.n_hashes, self._hash_sql()
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        ).localCheckpoint()
         new_bands = band_rows(
             new_sigs,
             self.n_hashes,
             self.bands,
             band_concat=self.hash_flavor == "portable",
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
 
         # SELF-EXCLUSION (r15, found by the hypothesis add/forget
         # property suite): the stored side drops the batch's OWN
@@ -178,7 +182,8 @@ class NearDupIndex:
             )
             # Broadcast the batch's band keys; the index side is
             # filtered by hash probe during its scan — never shuffled.
-            keys = new_bands.select("band_idx", "band_hash").distinct()
+            # No distinct(): a broadcast semi-join ignores duplicate keys.
+            keys = new_bands.select("band_idx", "band_hash")
             matched = idx_bands.join(
                 F.broadcast(keys), ["band_idx", "band_hash"], "semi"
             )
@@ -193,43 +198,50 @@ class NearDupIndex:
         # localCheckpoint: both sides of the candidate self-join read
         # this (probed-buckets-only, so batch-scale) set — without
         # materialization the index scan + semi probe + window would
-        # execute twice (measured 6.4 s -> 2.5 s at sf0.1). LAZY (r16,
-        # guide §1.2 — don't compute what's thrown away): a BUILD-ONLY
-        # call (indexing a held corpus, returned pairs never executed)
-        # used to pay the full probe window as an eager job before the
-        # appends; eager=False materializes on first consumption — once,
-        # shared by both self-join sides — or never. The plan still
-        # reads the PRE-append pinned file set, so laziness cannot move
-        # any value.
+        # execute twice (measured 6.4 s -> 2.5 s at sf0.1).
+        # eager=False defers only the checkpoint's own final stage:
+        # under AQE, building the plan's RDD runs every query stage
+        # below it (index scans, broadcasts, the window shuffle) right
+        # here, before the appends — so a build-only call whose pairs
+        # are never consumed still pays the probe. The plan reads the
+        # PRE-append pinned file set, so when it runs cannot move any
+        # value.
         guarded = guard_hot_buckets(combined, self.max_bucket).localCheckpoint(
             eager=False
         )
         a, b = guarded.alias("a"), guarded.alias("b")
-        pairs = (
-            a.join(
-                b,
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col("a.doc_id") < F.col("b.doc_id"))
-                & (F.col("a.is_new") | F.col("b.is_new")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_id_a"),
-                F.col("b.doc_id").alias("doc_id_b"),
-            )
-            .dropDuplicates(["doc_id_a", "doc_id_b"])
+        hits = a.join(
+            b,
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col("a.band_hash") == F.col("b.band_hash"))
+            & (F.col("a.doc_id") < F.col("b.doc_id"))
+            & (F.col("a.is_new") | F.col("b.is_new")),
         )
+        pairs = hits.select(
+            F.col("a.doc_id").alias("doc_id_a"),
+            F.col("b.doc_id").alias("doc_id_b"),
+        ).dropDuplicates(["doc_id_a", "doc_id_b"])
+        # Signatures for scoring: the batch's own, plus the stored ones
+        # of the pairs' held (index-side) members only — one signature
+        # store scan, semi-probed by a broadcast of those ids. Held
+        # members come from the batch-excluded index side, so a stored
+        # copy of a batch doc (a replay) never enters. The result is
+        # batch-scale: score_pairs broadcasts it once for both lookups.
+        sigs = new_sigs
         idx_sigs = self._stored(self.sigs_table)
         if idx_sigs is not None:
-            idx_sigs = idx_sigs.join(
-                F.broadcast(batch_ids), "doc_id", "left_anti"
+            held_ids = hits.select(
+                F.explode(
+                    F.array(
+                        F.when(~F.col("a.is_new"), F.col("a.doc_id")),
+                        F.when(~F.col("b.is_new"), F.col("b.doc_id")),
+                    )
+                ).alias("doc_id")
             )
-        all_sigs = (
-            new_sigs
-            if idx_sigs is None
-            else new_sigs.unionByName(idx_sigs)
-        )
-        scored = score_pairs(pairs, all_sigs, self.n_hashes, broadcast_pairs=True)
+            sigs = new_sigs.unionByName(
+                idx_sigs.join(F.broadcast(held_ids), "doc_id", "semi")
+            )
+        scored = score_pairs(pairs, sigs, self.n_hashes, broadcast_sigs=True)
         # Append AFTER building the probe plan: read() pinned the
         # pre-append file set, so the returned DataFrame is stable no
         # matter when the caller executes it.
@@ -238,9 +250,9 @@ class NearDupIndex:
         return scored
 
     def doc_count(self) -> int:
-        """Indexed documents (signature rows) — metadata-scale."""
-        sigs = self._stored(self.sigs_table)
-        return 0 if sigs is None else sigs.count()
+        """Indexed documents (signature rows), from the manifest row
+        stats (no Spark job)."""
+        return self.sigs_table.row_count()
 
     def delete_docs(
         self, doc_ids: DataFrame, batch_token: str | None = None
@@ -392,9 +404,9 @@ class ExactDedupIndex:
       an ingest pipeline wants — else the within-batch survivor), NULL
       for the survivor itself.
 
-    Probe shape mirrors the near-dup index: the batch's distinct
-    fingerprints broadcast against the index scan (32-byte keys; the
-    index never shuffles); only new-unique rows append, so the index
+    Probe shape mirrors the near-dup index: the batch's fingerprints
+    broadcast against the index scan (32-byte keys; the index never
+    shuffles); only new-unique rows append, so the index
     stays one row per distinct content forever. Replays (same
     ``batch_token``) are storage no-ops and return the SAME frame: a
     doc finding ITSELF as the held survivor reports exactly what its
@@ -436,27 +448,35 @@ class ExactDedupIndex:
 
         from ..functions.text import fingerprint
 
-        fps = docs.select("doc_id", fingerprint(self.text_col).alias("fp"))
+        # A NULL text has no fingerprint and gets no verdict.
+        fps = docs.select(
+            "doc_id", fingerprint(self.text_col).alias("fp")
+        ).filter(F.col("fp").isNotNull())
         if bloom is not None:
             fps = bloom.probe(fps, "fp")
-        bm = fps.groupBy("fp").agg(F.min("doc_id").alias("batch_survivor"))
-        per = fps.join(bm, "fp")
+        # The within-batch survivor as a window: one batch-side
+        # exchange (a groupBy joined back to ``fps`` would take two).
+        per = fps.withColumn(
+            "batch_survivor", F.min("doc_id").over(Window.partitionBy("fp"))
+        )
         held = self._stored()
         if held is not None:
             probe_side = (
                 fps if bloom is None else fps.filter(F.col("bloom_maybe"))
             )
-            keys = probe_side.select("fp").distinct()
-            matched = held.join(F.broadcast(keys), "fp", "semi").select(
-                "fp", F.col("doc_id").alias("held_survivor")
-            )
-            per = per.join(matched, "fp", "left")
+            # No distinct(): a broadcast semi-join ignores duplicate
+            # keys. ``matched`` holds at most one held row per batch
+            # fingerprint, so it is batch-scale and broadcast too.
+            matched = held.join(
+                F.broadcast(probe_side.select("fp")), "fp", "semi"
+            ).select("fp", F.col("doc_id").alias("held_survivor"))
+            per = per.join(F.broadcast(matched), "fp", "left")
         else:
             per = per.withColumn("held_survivor", F.lit(None).cast("long"))
         # Persist the per-doc resolution (r16, guide §5 caching rule):
         # batch-scale by contract, and read by up to THREE consumers —
-        # the new-uniques append job, the bloom merge's build_bloom,
-        # and the caller's consumption of ``out``. Unpersisted, each
+        # the new-uniques append job, the bloom merge, and the
+        # caller's consumption of ``out``. Unpersisted, each
         # re-ran the fingerprint scan + the 4 bitmap broadcast-probe
         # joins + both probe joins (measured: the admission entry's
         # probe step re-derived this plan 3× ≈ 2 s of its 8.9 s solo).
@@ -486,32 +506,22 @@ class ExactDedupIndex:
             & (F.col("doc_id") == F.col("batch_survivor"))
         ).select("fp", "doc_id")
         if bloom is not None:
-            # independent stores fed by the persisted resolution frame:
-            # overlap the fingerprint append with the bitmap merge
-            # (guide §2.6). Either commit may land first; a crash
-            # between them leaves at worst bitmap-ahead-of-index —
-            # bloom FALSE POSITIVES only (the exact probe resolves
-            # them), never a false negative, and the shared token
-            # converges the retry exactly as the sequential form did.
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=1) as pool:
-                fut = pool.submit(
-                    bloom.add_batch,
-                    new_uniques.select("fp"),
-                    "fp",
-                    batch_token=batch_token,
-                )
-                self.table.append(new_uniques, batch_token=batch_token)
-                fut.result()
-        else:
-            self.table.append(new_uniques, batch_token=batch_token)
+            # Bitmap first, fingerprint table second: a crash between
+            # the two commits leaves the bitmap ahead of the index —
+            # Bloom FALSE POSITIVES only, which the exact probe
+            # resolves — never a false negative. The shared token makes
+            # the retry skip the landed bitmap commit and finish the
+            # append.
+            bloom.add_batch(
+                new_uniques.select("fp"), "fp", batch_token=batch_token
+            )
+        self.table.append(new_uniques, batch_token=batch_token)
         return out
 
     def doc_count(self) -> int:
-        """Distinct contents held — metadata-scale."""
-        held = self._stored()
-        return 0 if held is None else held.count()
+        """Distinct contents held, from the manifest row stats (no
+        Spark job)."""
+        return self.table.row_count()
 
     def delete_docs(
         self, doc_ids: DataFrame, batch_token: str | None = None

@@ -222,14 +222,16 @@ def score_pairs(
     pairs: DataFrame,
     sigs: DataFrame,
     n_hashes: int = N_HASHES,
-    broadcast_pairs: bool = False,
+    broadcast_sigs: bool = False,
 ) -> DataFrame:
     """Attach the minhash Jaccard estimate (matching signature
-    components / k) to (doc_id_a, doc_id_b) pairs. ``broadcast_pairs``
-    flips the join strategy for the incremental-index case: the pair
-    set (one batch's findings) is tiny relative to the signature store,
-    so broadcasting it turns both lookups into hash probes over a
-    single signature scan — the store never shuffles."""
+    components / k) to (doc_id_a, doc_id_b) pairs. ``broadcast_sigs``
+    is the incremental-index case, where ``sigs`` is already restricted
+    to the batch and the pairs' members: ONE broadcast of it serves
+    both lookups (the two builds are the same exchange, reused), and
+    the pairs never move."""
+    if broadcast_sigs:
+        sigs = F.broadcast(sigs)
     sa = sigs.select(F.col("doc_id").alias("doc_id_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("doc_id").alias("doc_id_b"), F.col("sig").alias("sig_b"))
     match_frac = (
@@ -241,8 +243,6 @@ def score_pairs(
         ).cast("double")
         / F.lit(float(n_hashes))
     )
-    if broadcast_pairs:
-        pairs = F.broadcast(pairs)
     return (
         pairs.join(sa, "doc_id_a")
         .join(sb, "doc_id_b")

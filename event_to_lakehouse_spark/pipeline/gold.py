@@ -435,6 +435,14 @@ def gold_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 # "close the open row" is a latest-wins merge where the closed copy
 # (closed=1) beats the stored open copy (closed=0) — no row-level
 # UPDATE primitive needed.
+#
+# The open row also carries ``absorbed_ts``: the distinct timestamps
+# (after valid_from) of the same-state events folded into it. A later
+# event that is not late (ts >= valid_from) but lands BEFORE some of
+# them splits the open version, and those absorbed observations start
+# the open state again — without them the split would be lost and the
+# history would diverge from the full recompute. Closed rows carry
+# NULL (events before an open valid_from are late by contract).
 
 _SCD2_COLS = [
     "asset_uid", "state", "valid_from", "valid_to", "is_current", "version",
@@ -446,6 +454,7 @@ def _scd2_finish(versions: DataFrame) -> DataFrame:
     onto computed version rows."""
     return versions.select(
         *_SCD2_COLS,
+        "absorbed_ts",
         F.concat_ws(":", F.col("asset_uid"), F.col("version")).alias("hist_key"),
         (~F.col("is_current")).cast("int").alias("closed"),
     )
@@ -463,34 +472,44 @@ def scd2_apply_batch(
     Batches must be time-ordered per key: an event older than its key's
     open-version ``valid_from`` is LATE — counted, dropped, reported
     (rewriting closed history needs a backfill recompute, not a merge).
-    Within that contract the result equals ``gold_scd2_history`` over
-    the union of all applied batches (pytest-pinned).
+    Event ids grow across batches. Within that contract the result
+    equals ``gold_scd2_history`` over the union of all applied batches
+    (pytest-pinned, including events that land inside the open
+    version's span: its ``absorbed_ts`` observations are replayed as
+    seeds, so a split re-opens the old state where the full recompute
+    would).
 
     Scale shape: the open-row lookup is a key-co-partitioned join
     against an is_current filter (on Iceberg/Delta this is the
     current-partition scan); change detection is the same one-shuffle
     lag/lead/row_number stack as the full recompute, but over
-    |batch| + |touched keys| rows only; the merge rewrites only files
-    whose stats overlap the touched hist_keys. Cost tracks batch size,
-    not history size."""
+    |batch| + |touched keys' open observations| rows only; the merge
+    rewrites only files whose stats overlap the touched hist_keys. Cost
+    tracks batch size, not history size."""
     events = batch.select(
         "asset_uid", "state", "ts", F.col("event_id").cast("long").alias("event_id")
     )
+    ts_type = events.schema["ts"].dataType
+    ts_arr = f"array<{ts_type.simpleString()}>"
     snap = table.snapshot()
     if snap is None:
         open_info = None
     else:
         keys = events.select("asset_uid").distinct()
-        open_info = (
-            table.read()
-            .filter(F.col("is_current"))
-            .join(keys, "asset_uid")
-            .select(
-                "asset_uid",
-                F.col("state").alias("_open_state"),
-                F.col("valid_from").alias("_vf"),
-                F.col("version").alias("_base_version"),
-            )
+        current = table.read().filter(F.col("is_current"))
+        # tables written before absorbed_ts existed read as "nothing
+        # absorbed" (their split behaviour is unchanged)
+        absorbed = (
+            F.col("absorbed_ts")
+            if "absorbed_ts" in current.columns
+            else F.lit(None).cast(ts_arr)
+        )
+        open_info = current.join(keys, "asset_uid").select(
+            "asset_uid",
+            F.col("state").alias("_open_state"),
+            F.col("valid_from").alias("_vf"),
+            F.col("version").alias("_base_version"),
+            absorbed.alias("_absorbed"),
         )
 
     if open_info is not None:
@@ -500,14 +519,24 @@ def scd2_apply_batch(
         )
         n_late = late.count()
         ok = joined.filter(F.col("_vf").isNull() | (F.col("ts") >= F.col("_vf")))
-        # seed: the open version as a pseudo-event ordered BEFORE any
-        # batch event at the same timestamp (event_id -1)
+        # seeds: the open version (position 0, the anchor) and its
+        # absorbed observations as pseudo-events ordered BEFORE any batch
+        # event at the same timestamp (event_id -1; ids grow across
+        # batches, so every stored observation precedes the batch)
         seed = open_info.select(
             "asset_uid",
             F.col("_open_state").alias("state"),
-            F.col("_vf").alias("ts"),
+            F.posexplode(
+                F.concat(
+                    F.array("_vf"),
+                    F.coalesce("_absorbed", F.array().cast(ts_arr)),
+                )
+            ).alias("_pos", "ts"),
+            "_base_version",
+        ).select(
+            "asset_uid", "state", "ts",
             F.lit(-1).cast("long").alias("event_id"),
-            F.lit(1).alias("_is_seed"),
+            F.when(F.col("_pos") == 0, 1).otherwise(2).alias("_is_seed"),
             "_base_version",
         )
         stream = ok.select(
@@ -526,13 +555,24 @@ def scd2_apply_batch(
     flagged = stream.select(
         "asset_uid", "state", "ts", "event_id", "_is_seed", "_base_version",
         F.lag("state").over(w).alias("_prev"),
+    ).withColumn(
+        "_chg",
+        (F.col("_prev").isNull() | (F.col("_prev") != F.col("state"))).cast("int"),
     )
+    # run number per row (the anchor's run is 1) and the key's last run:
+    # the rows of the last run are the new open version's observations
+    runs = flagged.select(
+        "*",
+        F.sum("_chg")
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        .alias("_run"),
+    ).withColumn("_last_run", F.max("_run").over(Window.partitionBy("asset_uid")))
     # `ts` keeps its name through the second window — renaming it here
     # would break alias-aware partitioning propagation and re-shuffle
-    # (see gold_scd2_history's scale note).
-    changes = flagged.filter(
-        (F.col("_is_seed") == 0)
-        & (F.col("_prev").isNull() | (F.col("_prev") != F.col("state")))
+    # (see gold_scd2_history's scale note). Only the anchor is excluded:
+    # an absorbed seed after a different-state event re-opens its state.
+    changes = runs.filter(
+        (F.col("_is_seed") != 1) & (F.col("_chg") == 1)
     ).select("asset_uid", "state", "ts", "event_id", "_base_version")
     w2 = Window.partitionBy("asset_uid").orderBy("ts", "event_id")
     new_versions = changes.select(
@@ -546,8 +586,40 @@ def scd2_apply_batch(
             + F.row_number().over(w2)
         ).cast("int").alias("version"),
     )
+    # the open version's observations after its valid_from; `_in_open`
+    # marks keys whose open version did not change in this batch
+    tail = (
+        runs.filter(F.col("_run") == F.col("_last_run"))
+        .groupBy("asset_uid")
+        .agg(
+            F.min("state").alias("state"),
+            F.min("ts").alias("valid_from"),
+            F.collect_set("ts").alias("_tail_ts"),
+            F.max("_base_version").alias("version"),
+            F.max((F.col("_is_seed") == 1).cast("int")).alias("_in_open"),
+            F.sum((F.col("_is_seed") == 2).cast("int")).alias("_n_seeded"),
+        )
+        .withColumn(
+            "absorbed_ts",
+            # one stored type (nullable elements) across every commit
+            F.array_sort(
+                F.filter("_tail_ts", lambda t: t > F.col("valid_from"))
+            ).cast(ts_arr),
+        )
+    )
+    opened = (
+        new_versions.join(
+            tail.filter(F.col("_in_open") == 0).select("asset_uid", "absorbed_ts"),
+            "asset_uid",
+            "left",
+        )
+        .withColumn(
+            "absorbed_ts", F.when(F.col("is_current"), F.col("absorbed_ts"))
+        )
+    )
 
-    updates = _scd2_finish(new_versions)
+    updates = _scd2_finish(opened)
+    n_new = updates.filter(F.col("is_current")).count()
     if open_info is not None:
         # close the formerly-open row of every key the batch changed
         first_change = changes.groupBy("asset_uid").agg(
@@ -560,10 +632,24 @@ def scd2_apply_batch(
             F.col("_close_ts").alias("valid_to"),
             F.lit(False).alias("is_current"),
             F.col("_base_version").alias("version"),
+            F.lit(None).cast(ts_arr).alias("absorbed_ts"),
         )
-        updates = updates.unionByName(_scd2_finish(closures))
+        # an unchanged open version that absorbed NEW timestamps is
+        # rewritten in place (same hist_key; the batch copy wins the tie)
+        grown = tail.filter(
+            (F.col("_in_open") == 1)
+            & (F.size("absorbed_ts") > F.col("_n_seeded"))
+        ).select(
+            "asset_uid", "state", "valid_from",
+            F.lit(None).cast(ts_type).alias("valid_to"),
+            F.lit(True).alias("is_current"),
+            F.col("version").cast("int").alias("version"),
+            "absorbed_ts",
+        )
+        updates = updates.unionByName(_scd2_finish(closures)).unionByName(
+            _scd2_finish(grown)
+        )
 
-    n_new = updates.filter(F.col("is_current")).count()
     snap = table.merge(
         updates,
         key="hist_key",

@@ -23,9 +23,10 @@ Plan shapes (the 100 TB case):
   broadcast-NL — the intended plan) then append. Cost scales with the
   batch only.
 - ``query``: queries × broadcast centroids pick ``n_probe`` cells
-  each; the probed cell ids broadcast-semi-filter the assignment scan
-  (the index never shuffles); exact cosine + per-query top-k via
-  window (TakeOrdered-scale: queries ≪ corpus).
+  each; the assignment scan inner-joins the broadcast (query, cell)
+  pairs, which keeps only probed cells (the index never shuffles);
+  exact cosine + per-query top-k via window (TakeOrdered-scale:
+  queries ≪ corpus).
 
 EXACTNESS ESCAPE HATCH: with ``n_probe >= n_centroids`` every cell is
 probed and the result equals brute-force top-k EXACTLY — the pytest
@@ -127,7 +128,7 @@ class IVFIndex:
                 l2_norm("embedding").alias("c_norm"),
             )
         idx.centroids_table.append(cent, batch_token=batch_token)
-        idx.n_centroids = idx.centroids_table.read().count()
+        idx.n_centroids = idx.centroids_table.row_count()
         (idx.root / "index.json").write_text(
             json.dumps({"n_centroids": idx.n_centroids})
         )
@@ -167,14 +168,13 @@ class IVFIndex:
             F.col("_norm").alias("q_norm"),
             "cent_id",
         )
-        cells = qcells.select("cent_id").distinct()
-        probed = self.assign_table.read().join(
-            F.broadcast(cells), "cent_id", "semi"
-        )
         denom = F.col("q_norm") * F.col("_norm")
         cos = F.when(denom > 0, dot("q_emb", "embedding") / denom)
         scored = (
-            probed.join(F.broadcast(qcells), "cent_id")
+            # the inner join on the broadcast query cells is the cell
+            # probe: it filters the assignment scan to probed cells
+            self.assign_table.read()
+            .join(F.broadcast(qcells), "cent_id")
             .filter(F.col("vec_id") != F.col("query_id"))
             .select("query_id", "vec_id", F.round(cos, 6).alias("cos_sim"))
             # a (query, vec) pair reappears once per shared probed cell
@@ -195,11 +195,8 @@ class IVFIndex:
         )
 
     def vec_count(self) -> int:
-        """Indexed vectors — metadata-scale."""
-        try:
-            return self.assign_table.read().count()
-        except FileNotFoundError:
-            return 0
+        """Indexed vectors, from the manifest row stats (no Spark job)."""
+        return self.assign_table.row_count()
 
     def maintain(
         self, target_file_bytes: int = 128 * 1024 * 1024, keep_versions: int = 1

@@ -21,11 +21,12 @@ Layout (SnapshotTables under ``root``):
 
 Serving plan (the 100 TB case, all three FAISS stages multiplying):
 queries rank against the broadcast centroid table and probe their
-``n_probe`` cells; the codes scan is semi-filtered to probed cells
-(cell-clustered files + zone maps prune it further after
-``maintain()``); ADC scores the survivors via broadcast per-query LUTs
-without touching any embedding; only the per-query shortlist re-reads
-full vectors for the exact re-rank. Nothing corpus-sized shuffles or
+``n_probe`` cells; the codes scan inner-joins the broadcast
+(query, cell) pairs, which keeps only probed cells (cell-clustered
+files + zone maps prune it further after ``maintain()``); ADC
+scores the survivors via broadcast per-query LUTs without touching
+any embedding; only the per-query shortlist re-reads full vectors for
+the exact re-rank. Nothing corpus-sized shuffles or
 broadcasts in any stage.
 
 Reference parity note: the reference pipeline (6 files) has no vector
@@ -385,26 +386,19 @@ class IVFPQIndex:
         cb = self._codebook()
         qcells = rank_against_centroids(
             queries, self._centroids(), n_probe
-        ).select(F.col("vec_id").alias("query_id"), "embedding", "cent_id")
-        cells = qcells.select("cent_id").distinct()
-        probed = self.codes_table.read().join(
-            F.broadcast(cells), "cent_id", "semi"
-        )
-        qsub = _sub_explode(
-            qcells.select("query_id", "embedding").dropDuplicates(["query_id"])
-            .withColumnRenamed("query_id", "vec_id"),
-            "query_id",
-        )
-        lut = qsub.join(F.broadcast(cb), "j").select(
+        ).select(F.col("vec_id").alias("query_id"), "cent_id")
+        # The LUT comes from ``queries`` itself, so the query-to-centroid
+        # ranking runs once: for the inner cell join below, which also
+        # filters the codes scan to the probed cells.
+        lut = _sub_explode(queries, "query_id").join(F.broadcast(cb), "j").select(
             "query_id",
             "j",
             F.col("cent_id").alias("lut_cent"),
             _d2_micro(F.col("sub"), F.col("c_sub")).alias("qd_micro"),
         )
         cand = (
-            probed.join(
-                F.broadcast(qcells.select("query_id", "cent_id")), "cent_id"
-            )
+            self.codes_table.read()
+            .join(F.broadcast(qcells), "cent_id")
             .filter(F.col("vec_id") != F.col("query_id"))
         )
         adc = (
@@ -422,11 +416,9 @@ class IVFPQIndex:
         return _exact_rerank(emb, short, queries, k)
 
     def vec_count(self) -> int:
-        """Vectors held (codes rows / PQ_M) — metadata-scale."""
-        try:
-            return self.codes_table.read().count() // PQ_M
-        except FileNotFoundError:
-            return 0
+        """Vectors held (codes rows / PQ_M), from the manifest row stats
+        (no Spark job)."""
+        return self.codes_table.row_count() // PQ_M
 
     def delete_vecs(
         self, vec_ids: DataFrame, batch_token: str | None = None

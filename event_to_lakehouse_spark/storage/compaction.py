@@ -65,6 +65,9 @@ def _shape(
 
         return cluster_by_zorder(df, zorder_cols, n_out)
     if sort_cols:
+        if n_out == 1:
+            # one globally sorted file needs no range exchange
+            return df.coalesce(1).sortWithinPartitions(*sort_cols)
         return df.repartitionByRange(n_out, *sort_cols).sortWithinPartitions(
             *sort_cols
         )

@@ -104,14 +104,16 @@ class InvertedIndex:
                 return snap
             return table.append(rows, batch_token=batch_token)
 
-        _tokened(self.postings_table, postings)
-        return _tokened(self.doclens_table, doclens)
+        try:
+            _tokened(self.postings_table, postings)
+            return _tokened(self.doclens_table, doclens)
+        finally:
+            postings.unpersist()
 
     def doc_count(self) -> int:
-        try:
-            return self.doclens_table.read().count()
-        except FileNotFoundError:
-            return 0
+        """Indexed documents (doc-length rows), from the manifest row
+        stats (no Spark job)."""
+        return self.doclens_table.row_count()
 
     def delete_docs(
         self, doc_ids: DataFrame, batch_token: str | None = None

@@ -408,18 +408,18 @@ def test_exact_index_forget_and_content_forget(spark, tmp_dir):
 
 def test_exact_index_bloom_crash_retry_no_false_negative(spark, tmp_dir):
     """r15 pin for the admission pairing's crash window: a writer
-    killed between the exact-table append and the bloom merge, then
-    retried with the same token, must leave filter and index in
-    lock-step — no permanent bloom false negative.
+    killed at the bloom merge, then retried with the same token, must
+    leave filter and index in lock-step — no permanent bloom false
+    negative.
 
     The design self-heals through the admission gate itself: on retry
     the bloom (still missing the batch) reports bloom_maybe=False, so
-    the held-index join never sees the batch's committed copies,
-    new_uniques recomputes to the SAME key set, the table append
-    no-ops on its token, and the bloom commit lands with the right
-    keys. A full replay (both committed) then no-ops everywhere with
-    the bitmap intact. Probed here because the recompute-under-retry
-    is subtle enough that a refactor could silently break it."""
+    the held-index join is skipped, new_uniques recomputes to the SAME
+    key set, and both commits land with the right keys (had the
+    fingerprint append landed first, it would no-op on its token). A
+    full replay (both committed) then no-ops everywhere with the
+    bitmap intact. Probed here because the recompute-under-retry is
+    subtle enough that a refactor could silently break it."""
     from unittest import mock
 
     from event_to_lakehouse_spark.dedup.bloom import BloomIndex
@@ -464,6 +464,55 @@ def test_exact_index_bloom_crash_retry_no_false_negative(spark, tmp_dir):
         ).collect()
     }
     assert fut == {9: (False, 1, True)}
+
+
+def test_exact_index_bitmap_first_crash_retry(spark, tmp_dir):
+    """The other crash window of the admission pairing: the bitmap
+    commits first, so a writer killed after it and before the
+    fingerprint append leaves the bitmap AHEAD of the index — Bloom
+    false positives only. The retry sees bloom_maybe=True for the
+    batch, finds no held row (the append never landed), reproduces the
+    first run's verdicts, skips the landed bitmap commit on its token
+    and lands the append."""
+    from unittest import mock
+
+    from event_to_lakehouse_spark.dedup.bloom import BloomIndex
+    from event_to_lakehouse_spark.dedup.incremental import ExactDedupIndex
+
+    idx = ExactDedupIndex(spark, f"{tmp_dir}/exact")
+    bloom = BloomIndex(spark, f"{tmp_dir}/bloom", m_bits=4096, k=4)
+
+    def df(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    class Killed(BaseException):
+        pass
+
+    b0 = [(1, "alpha beta gamma"), (2, "delta epsilon zeta"), (3, "alpha beta gamma")]
+    with mock.patch.object(idx.table, "append", side_effect=Killed()):
+        try:
+            idx.index_batch(df(b0), batch_token="t0", bloom=bloom)
+        except Killed:
+            pass
+    assert "t0" in bloom.table.snapshot().batch_tokens
+    assert idx.table.snapshot() is None
+    v = bloom.table.snapshot().version
+
+    out = {
+        r.doc_id: (r.is_new_unique, r.dup_of, r.bloom_maybe)
+        for r in idx.index_batch(df(b0), batch_token="t0", bloom=bloom).collect()
+    }
+    assert out == {1: (True, None, True), 2: (True, None, True), 3: (False, 1, True)}
+    assert bloom.table.snapshot().version == v  # bitmap commit not repeated
+    assert idx.doc_count() == 2
+
+    fut = {
+        r.doc_id: (r.is_new_unique, r.dup_of)
+        for r in idx.index_batch(
+            df([(9, "delta epsilon zeta")]), batch_token="t1", bloom=bloom
+        ).collect()
+    }
+    assert fut == {9: (False, 2)}
 
 
 # -- IVFPQ index -------------------------------------------------------------

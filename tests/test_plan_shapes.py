@@ -250,24 +250,23 @@ def test_incremental_index_probes_never_shuffle_the_index(spark, tmp_dir):
     a = audit_plan(probe)
     assert a.sort_merge_joins == 0
     assert a.broadcast_hash_joins >= 1  # the fp semi-probe + resolution
-    # ≤3 since r16: the probe result is served off the PERSISTED
-    # resolution frame, and the formatted plan embeds the cached
-    # subtree, so the batch-side fp shuffle is counted again through
-    # the persist boundary. At runtime the batch-side shuffles execute
-    # once (at cache materialization); the INDEX side still never
+    # The only batch-side shuffle is the survivor window over fp; the
+    # probe result is served off the PERSISTED resolution frame, and
+    # the formatted plan embeds the cached subtree, so that shuffle is
+    # counted again through the persist boundary. At runtime it
+    # executes once (at cache materialization); the INDEX side never
     # shuffles — which the sort_merge_joins == 0 assertion pins.
-    assert a.shuffle_exchanges <= 3  # batch-side fp groupBy only
+    assert a.shuffle_exchanges <= 2
 
     emb = load_tables(spark, SF_DIR)["embeddings"].select("vec_id", "embedding")
     ivf = IVFIndex.build(spark, f"{tmp_dir}/ivf", emb, cent_stride=50)
     q = ivf.query(emb.filter(F.col("vec_id") < 5), k=10, n_probe=3)
     a = audit_plan(q)
     assert a.sort_merge_joins == 0
-    assert a.broadcast_hash_joins >= 1  # cell semi-probe + qcells join
-    # every shuffle is QUERY-side (query-affinity window, distinct
-    # probed cells, pair dedup, final rank) — bounded by the query set,
-    # never by the index
-    assert a.shuffle_exchanges <= 6
+    assert a.broadcast_hash_joins >= 1  # the query-cell probe join
+    # every shuffle is QUERY-side (query-affinity window, pair dedup,
+    # final rank) — bounded by the query set, never by the index
+    assert a.shuffle_exchanges <= 3
 
 
 def test_corr_matrix_single_scan_single_agg(spark, qs):
