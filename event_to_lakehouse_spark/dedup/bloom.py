@@ -204,7 +204,7 @@ class BloomIndex:
         m_bits: int | None = None,
         k: int = K_HASHES,
     ):
-        from ..storage.snapshots import SnapshotTable
+        from ..storage.index_core import IndexTables
 
         self.spark = spark
         self.root = Path(root)
@@ -223,13 +223,9 @@ class BloomIndex:
             self.m_bits, self.k = m_bits, k
             self.root.mkdir(parents=True, exist_ok=True)
             geo_path.write_text(json.dumps({"m_bits": m_bits, "k": k}))
-        self.table = SnapshotTable(spark, str(self.root / "words"))
-
-    def _stored(self) -> DataFrame | None:
-        try:
-            return self.table.read()
-        except FileNotFoundError:
-            return None
+        # the bitmap is rewritten whole by every commit: pinned
+        self.tables = IndexTables(spark, self.root, {"words": None})
+        self.table = self.tables["words"]
 
     @classmethod
     def for_table(
@@ -304,7 +300,7 @@ class BloomIndex:
         """``df`` + ``bloom_maybe``: False rows are GUARANTEED absent
         from every batch ever added; True rows go on to the exact
         index. An empty index admits nothing."""
-        held = self._stored()
+        held = self.tables.read("words")
         if held is None:
             return df.withColumn("bloom_maybe", F.lit(False))
         return bloom_maybe(df, col, held, self.m_bits, self.k)

@@ -57,7 +57,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..storage.snapshots import SnapshotTable
+from ..storage.index_core import IndexTables
 from .minhash import (
     BANDS,
     MAX_BUCKET,
@@ -80,6 +80,14 @@ class NearDupIndex:
     at creation; reopening with conflicting explicit arguments raises —
     mixing hash flavors in one index would silently miss every
     cross-flavor duplicate.
+
+    Commit order: bands, then signatures, for appends and forgets alike
+    (``IndexTables``). A crash between the two manifests leaves band
+    rows without signatures — after an append, candidate pairs with the
+    half-indexed docs are dropped at scoring and ``doc_count`` leaves
+    them out; after a forget, the forgotten docs are already
+    unprobeable — and a retry with the same token lands the signature
+    commit.
     """
 
     def __init__(
@@ -119,8 +127,15 @@ class NearDupIndex:
         self.max_bucket = max_bucket
         self.hash_flavor = hash_flavor
         self.text_col = text_col
-        self.bands_table = SnapshotTable(spark, str(self.root / "bands"))
-        self.sigs_table = SnapshotTable(spark, str(self.root / "sigs"))
+        # maintain(): bands clustered by bucket so each probed bucket
+        # lives in few files and refreshed zone maps prune the probe scan
+        self.tables = IndexTables(
+            spark,
+            self.root,
+            {"bands": ["band_idx", "band_hash"], "sigs": ["doc_id"]},
+        )
+        self.bands_table = self.tables["bands"]
+        self.sigs_table = self.tables["sigs"]
 
     # -- internals ----------------------------------------------------------
 
@@ -130,12 +145,6 @@ class NearDupIndex:
 
             return seeded_hash_spark
         return None  # minhash default: xxhash64
-
-    def _stored(self, table: SnapshotTable) -> DataFrame | None:
-        try:
-            return table.read()
-        except FileNotFoundError:  # first batch: empty index
-            return None
 
     # -- API ----------------------------------------------------------------
 
@@ -175,7 +184,7 @@ class NearDupIndex:
         # batch-scale, so the anti joins stay broadcast hash probes on
         # the index scans — no new shuffle.
         batch_ids = new_sigs.select("doc_id")
-        idx_bands = self._stored(self.bands_table)
+        idx_bands = self.tables.read("bands")
         if idx_bands is not None:
             idx_bands = idx_bands.join(
                 F.broadcast(batch_ids), "doc_id", "left_anti"
@@ -228,7 +237,7 @@ class NearDupIndex:
         # copy of a batch doc (a replay) never enters. The result is
         # batch-scale: score_pairs broadcasts it once for both lookups.
         sigs = new_sigs
-        idx_sigs = self._stored(self.sigs_table)
+        idx_sigs = self.tables.read("sigs")
         if idx_sigs is not None:
             held_ids = hits.select(
                 F.explode(
@@ -245,8 +254,7 @@ class NearDupIndex:
         # Append AFTER building the probe plan: read() pinned the
         # pre-append file set, so the returned DataFrame is stable no
         # matter when the caller executes it.
-        self.bands_table.append(new_bands, batch_token=batch_token)
-        self.sigs_table.append(new_sigs, batch_token=batch_token)
+        self.tables.commit(batch_token, {"bands": new_bands, "sigs": new_sigs})
         return scored
 
     def doc_count(self) -> int:
@@ -263,48 +271,19 @@ class NearDupIndex:
         EXACTLY a probe against a fresh index over the surviving docs
         (pytest-pinned): the forgotten docs can never match again, and
         no surviving pair is lost. Both tables take the SAME
-        ``batch_token`` (crash-retry self-heals). Note the hot-bucket
-        guard's append-monotone caveat runs in reverse here: a bucket
-        that dropped below ``max_bucket`` through deletes simply
-        becomes eligible again — no correctness debt."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        # independent tables, same token: overlap the two COW rewrites
-        # (guide §2.6); crash semantics are unchanged — either table
-        # may land first, and the shared token self-heals a retry.
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            fut = pool.submit(
-                self.sigs_table.delete_keys,
-                doc_ids,
-                "doc_id",
-                batch_token=batch_token,
-            )
-            self.bands_table.delete_keys(
-                doc_ids, "doc_id", batch_token=batch_token
-            )
-            fut.result()
+        ``batch_token``, bands first (see the class docstring). Note
+        the hot-bucket guard's append-monotone caveat runs in reverse
+        here: a bucket that dropped below ``max_bucket`` through
+        deletes simply becomes eligible again — no correctness debt."""
+        self.tables.delete_keys(doc_ids, "doc_id", batch_token=batch_token)
 
     def maintain(
         self, target_file_bytes: int = 128 * 1024 * 1024, keep_versions: int = 1
     ) -> int:
-        """Index housekeeping: every batch commit lands its own small
-        files, so a long-lived index accretes a small-file problem. One
-        atomic bin-packed rewrite per table — bands CLUSTERED by
-        (band_idx, band_hash) so each probed bucket lives in few files
-        and the refreshed zone maps prune the probe scan — then vacuum.
-        Batch-token chains survive (token-preserving overwrite), so a
-        replay straddling maintenance is still a no-op. Returns files
+        """Every batch commit lands its own small files: one atomic
+        bin-packed rewrite per table, then vacuum. Returns files
         removed by vacuum."""
-        from ..storage.compaction import compact_snapshot
-
-        compact_snapshot(
-            self.bands_table, target_file_bytes,
-            sort_cols=["band_idx", "band_hash"],
-        )
-        compact_snapshot(self.sigs_table, target_file_bytes, sort_cols=["doc_id"])
-        return self.bands_table.vacuum(keep_versions) + self.sigs_table.vacuum(
-            keep_versions
-        )
+        return self.tables.maintain(target_file_bytes, keep_versions)
 
 
 def _incremental_oracle() -> str:
@@ -411,18 +390,20 @@ class ExactDedupIndex:
     ``batch_token``) are storage no-ops and return the SAME frame: a
     doc finding ITSELF as the held survivor reports exactly what its
     first run reported.
+
+    The fingerprint table is the index's only table, and it lives at
+    ``root`` itself. With a paired ``BloomIndex`` the bitmap commits
+    first (see ``index_batch``).
     """
 
     def __init__(self, spark: SparkSession, root: str, text_col: str = "text"):
         self.spark = spark
         self.text_col = text_col
-        self.table = SnapshotTable(spark, root)
-
-    def _stored(self) -> DataFrame | None:
-        try:
-            return self.table.read()
-        except FileNotFoundError:
-            return None
+        # maintain(): clustered by fp so the broadcast probe prunes on
+        # refreshed zone maps
+        self._name = Path(root).name
+        self.tables = IndexTables(spark, Path(root).parent, {self._name: ["fp"]})
+        self.table = self.tables[self._name]
 
     def index_batch(
         self, docs: DataFrame, batch_token: str | None = None, bloom=None
@@ -444,8 +425,6 @@ class ExactDedupIndex:
         bloom_maybe reads True — callers that persist verdicts should
         guard replays at the batch level, as
         ``streaming.jobs.bloom_admission_stream`` does."""
-        from pyspark import StorageLevel
-
         from ..functions.text import fingerprint
 
         # A NULL text has no fingerprint and gets no verdict.
@@ -459,7 +438,7 @@ class ExactDedupIndex:
         per = fps.withColumn(
             "batch_survivor", F.min("doc_id").over(Window.partitionBy("fp"))
         )
-        held = self._stored()
+        held = self.tables.read(self._name)
         if held is not None:
             probe_side = (
                 fps if bloom is None else fps.filter(F.col("bloom_maybe"))
@@ -473,14 +452,18 @@ class ExactDedupIndex:
             per = per.join(F.broadcast(matched), "fp", "left")
         else:
             per = per.withColumn("held_survivor", F.lit(None).cast("long"))
-        # Persist the per-doc resolution (r16, guide §5 caching rule):
-        # batch-scale by contract, and read by up to THREE consumers —
-        # the new-uniques append job, the bloom merge, and the
-        # caller's consumption of ``out``. Unpersisted, each
-        # re-ran the fingerprint scan + the 4 bitmap broadcast-probe
-        # joins + both probe joins (measured: the admission entry's
-        # probe step re-derived this plan 3× ≈ 2 s of its 8.9 s solo).
-        per = per.persist(StorageLevel.MEMORY_AND_DISK)
+        # Materialize the per-doc resolution once: batch-scale by
+        # contract, and read by up to THREE consumers — the bloom
+        # merge, the new-uniques append, and the caller's consumption
+        # of ``out``. Recomputed, each re-ran the fingerprint scan, the
+        # bitmap broadcast probes and both probe joins. A local
+        # checkpoint, not persist(): nothing can unpersist a frame that
+        # the caller still reads after this returns, while checkpoint
+        # blocks go with the last frame that reads them. As in
+        # NearDupIndex, eager=False still runs every query stage below
+        # it here, before the commits, against the pinned pre-commit
+        # file sets.
+        per = per.localCheckpoint(eager=False)
         # held_survivor == doc_id happens only on replay (the doc's own
         # indexed row): report it exactly as the first run did.
         self_held = F.col("held_survivor") == F.col("doc_id")
@@ -544,26 +527,21 @@ class ExactDedupIndex:
         fingerprint and call :meth:`delete_fps`. A paired
         ``BloomIndex`` must be rebuilt from the surviving fingerprints
         (``BloomIndex.rebuild_from`` — bits are shared; see there)."""
-        ids = doc_ids.select("doc_id")
-        self.table.delete_keys(ids, "doc_id", batch_token=batch_token)
+        self.tables.delete_keys(doc_ids, "doc_id", batch_token=batch_token)
 
     def delete_fps(
         self, fps: DataFrame, batch_token: str | None = None
     ) -> None:
         """Content-level forget: remove fingerprints outright (column
         ``fp``), regardless of which doc_id holds them."""
-        self.table.delete_keys(fps.select("fp"), "fp", batch_token=batch_token)
+        self.tables.delete_keys(fps, "fp", batch_token=batch_token)
 
     def maintain(
         self, target_file_bytes: int = 128 * 1024 * 1024, keep_versions: int = 1
     ) -> int:
-        """Bin-pack the fingerprint table (clustered by fp so the
-        broadcast probe prunes on refreshed stats) and vacuum; batch
-        tokens survive. Returns files removed."""
-        from ..storage.compaction import compact_snapshot
-
-        compact_snapshot(self.table, target_file_bytes, sort_cols=["fp"])
-        return self.table.vacuum(keep_versions)
+        """Bin-pack the fingerprint table and vacuum; batch tokens
+        survive. Returns files removed."""
+        return self.tables.maintain(target_file_bytes, keep_versions)
 
 
 def _exact_incremental_oracle() -> str:
@@ -660,7 +638,6 @@ def dedup_admission_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage's input: the bitmap is metadata-scale, the exact probe is
     bloom-pass-sized, the LSH probe is new-unique-sized."""
     import tempfile
-    from concurrent.futures import ThreadPoolExecutor
 
     from .bloom import BloomIndex
 
@@ -671,18 +648,10 @@ def dedup_admission_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ex = ExactDedupIndex(spark, f"{root}/exact")
     nd = NearDupIndex(spark, f"{root}/nd", hash_flavor="portable")
-    # The two held builds are INDEPENDENT index lineages (the bloom
-    # bitmap derives from the exact table; the near-dup band/sig store
-    # touches neither) — overlap them so the near-dup build's commit
-    # jobs back-fill the exact chain's scheduling gaps (guide §2.6).
-    # Results are unaffected: no shared mutable state, and each
-    # index's own commits stay ordered within its thread.
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        nd_held = pool.submit(nd.index_batch, held, "held")
-        ex.index_batch(held, batch_token="held")
-        bloom = BloomIndex.for_table(spark, f"{root}/bloom", ex.table)
-        bloom.add_batch(ex.table.read(), "fp", batch_token="held")
-        nd_held.result()
+    ex.index_batch(held, batch_token="held")
+    bloom = BloomIndex.for_table(spark, f"{root}/bloom", ex.table)
+    bloom.add_batch(ex.table.read(), "fp", batch_token="held")
+    nd.index_batch(held, batch_token="held")
 
     resolved = ex.index_batch(
         batch, batch_token="new", bloom=bloom

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..storage.snapshots import SnapshotTable
+from ..storage.index_core import IndexTables
 
 __all__ = ["IVFIndex", "rank_against_centroids"]
 
@@ -85,8 +85,14 @@ class IVFIndex:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = Path(root)
-        self.centroids_table = SnapshotTable(spark, str(self.root / "centroids"))
-        self.assign_table = SnapshotTable(spark, str(self.root / "assign"))
+        # maintain(): assignments clustered by cent_id so each cell's
+        # vectors land contiguously and a probe of n_probe cells
+        # touches few files; the centroids are pinned at build
+        self.tables = IndexTables(
+            spark, self.root, {"centroids": None, "assign": ["cent_id"]}
+        )
+        self.centroids_table = self.tables["centroids"]
+        self.assign_table = self.tables["assign"]
         meta = self.root / "index.json"
         self.n_centroids = (
             json.loads(meta.read_text())["n_centroids"] if meta.exists() else None
@@ -127,7 +133,7 @@ class IVFIndex:
                 F.col("embedding").alias("c_emb"),
                 l2_norm("embedding").alias("c_norm"),
             )
-        idx.centroids_table.append(cent, batch_token=batch_token)
+        idx.tables.commit(batch_token, {"centroids": cent})
         idx.n_centroids = idx.centroids_table.row_count()
         (idx.root / "index.json").write_text(
             json.dumps({"n_centroids": idx.n_centroids})
@@ -152,7 +158,7 @@ class IVFIndex:
         assigned = self._affinity(vectors, top=1).select(
             "vec_id", "cent_id", "embedding", "_norm"
         )
-        return self.assign_table.append(assigned, batch_token=batch_token)
+        return self.tables.commit(batch_token, {"assign": assigned})
 
     def query(
         self, queries: DataFrame, k: int = 10, n_probe: int = 3
@@ -201,17 +207,9 @@ class IVFIndex:
     def maintain(
         self, target_file_bytes: int = 128 * 1024 * 1024, keep_versions: int = 1
     ) -> int:
-        """Bin-pack the assignment table CLUSTERED BY cent_id — each
-        cell's vectors land contiguously, so a probe of n_probe cells
-        touches few files and refreshed zone maps prune the rest — then
-        vacuum old snapshots. Batch tokens survive. Returns files
-        removed."""
-        from ..storage.compaction import compact_snapshot
-
-        compact_snapshot(
-            self.assign_table, target_file_bytes, sort_cols=["cent_id"]
-        )
-        return self.assign_table.vacuum(keep_versions)
+        """Bin-pack the assignment table by cent_id, then vacuum old
+        snapshots. Batch tokens survive. Returns files removed."""
+        return self.tables.maintain(target_file_bytes, keep_versions)
 
 
 def _persisted_oracle() -> str:

@@ -19,6 +19,13 @@ Layout (SnapshotTables under ``root``):
   plus its PQ_M 4-bit-capable codes: ~6 bytes of index state per
   vector instead of the 256-byte embedding.
 
+Commit order (``storage.index_core.IndexTables``): ``build`` commits the
+centroids, then the codebook, both under the token ``"build"``, and
+writes ``index.json`` last. A build that crashes before ``index.json``
+has not built the index: calling ``build`` again with the same arguments
+skips the landed centroid commit and completes it (training is
+deterministic, so both runs pin the same quantizers).
+
 Serving plan (the 100 TB case, all three FAISS stages multiplying):
 queries rank against the broadcast centroid table and probe their
 ``n_probe`` cells; the codes scan inner-joins the broadcast
@@ -42,7 +49,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..storage.snapshots import SnapshotTable
+from ..storage.index_core import IndexTables
 from .ann import CENT_STRIDE, EMB_DIM, N_PROBE
 from .ivf_index import rank_against_centroids
 from .pq import (
@@ -246,9 +253,17 @@ class IVFPQIndex:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = Path(root)
-        self.centroids_table = SnapshotTable(spark, str(self.root / "centroids"))
-        self.codebook_table = SnapshotTable(spark, str(self.root / "codebook"))
-        self.codes_table = SnapshotTable(spark, str(self.root / "codes"))
+        # maintain(): codes clustered by (cent_id, vec_id) so each
+        # cell's codes land contiguously and an n_probe-cell probe
+        # touches few files; the quantizers are pinned at build
+        self.tables = IndexTables(
+            spark,
+            self.root,
+            {"centroids": None, "codebook": None, "codes": ["cent_id", "vec_id"]},
+        )
+        self.centroids_table = self.tables["centroids"]
+        self.codebook_table = self.tables["codebook"]
+        self.codes_table = self.tables["codes"]
         meta = self.root / "index.json"
         self.n_centroids = (
             json.loads(meta.read_text())["n_centroids"] if meta.exists() else None
@@ -312,37 +327,14 @@ class IVFPQIndex:
                 F.col("embedding").alias("c_emb"),
                 l2_norm("embedding").alias("c_norm"),
             )
-        # The two quantizer commits are independent tables fed by
-        # already-materialized frames — overlap them (guide §2.6), and
-        # take the centroid count from the committed MANIFEST row stats
-        # (a metadata read) instead of a read-back count job (r16).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            fut = pool.submit(
-                idx.codebook_table.append, cb, batch_token="build"
-            )
-            idx.centroids_table.append(cent, batch_token="build")
-            fut.result()
+        # the centroid count comes from the committed MANIFEST row
+        # stats (a metadata read), not a read-back count job
+        idx.tables.commit("build", {"centroids": cent, "codebook": cb})
         idx.n_centroids = idx.centroids_table.row_count()
         (idx.root / "index.json").write_text(
             json.dumps({"n_centroids": idx.n_centroids})
         )
         return idx
-
-    # -- internals -----------------------------------------------------------
-
-    def _centroids(self) -> DataFrame:
-        return self.centroids_table.read()
-
-    def _codebook(self) -> DataFrame:
-        try:
-            return self.codebook_table.read()
-        except FileNotFoundError:
-            raise FileNotFoundError(
-                f"IVFPQIndex at {self.root} has no pinned codebook — "
-                "build() it first"
-            ) from None
 
     # -- API -----------------------------------------------------------------
 
@@ -350,23 +342,16 @@ class IVFPQIndex:
         """Cell-assign + PQ-encode the batch and append its
         (vec_id, cent_id, j, code) rows — batch cost only; held codes
         are untouched. Replayed tokens are storage no-ops."""
-        snap = self.codes_table.snapshot()
-        if (
-            batch_token is not None
-            and snap is not None
-            and batch_token in snap.batch_tokens
-        ):
-            return snap
-        assigned = rank_against_centroids(vectors, self._centroids(), 1).select(
-            "vec_id", "cent_id"
-        )
-        codes = pq_encode(vectors, self._codebook()).withColumnRenamed(
+        assigned = rank_against_centroids(
+            vectors, self.centroids_table.read(), 1
+        ).select("vec_id", "cent_id")
+        codes = pq_encode(vectors, self.codebook_table.read()).withColumnRenamed(
             "code", "pq_code"
         )
         rows = codes.join(assigned, "vec_id").select(
             "vec_id", "cent_id", "j", F.col("pq_code").alias("code")
         )
-        return self.codes_table.append(rows, batch_token=batch_token)
+        return self.tables.commit(batch_token, {"codes": rows})
 
     def topk(
         self,
@@ -383,9 +368,9 @@ class IVFPQIndex:
         ``ann_ivfpq_topk`` pipeline over everything ever added is
         pytest-pinned AND oracle-checked via
         ``ann_ivfpq_index_persisted``."""
-        cb = self._codebook()
+        cb = self.codebook_table.read()
         qcells = rank_against_centroids(
-            queries, self._centroids(), n_probe
+            queries, self.centroids_table.read(), n_probe
         ).select(F.col("vec_id").alias("query_id"), "cent_id")
         # The LUT comes from ``queries`` itself, so the query-to-centroid
         # ranking runs once: for the inner cell join below, which also
@@ -432,23 +417,14 @@ class IVFPQIndex:
         they can appear in no cell probe, no ADC shortlist, no re-rank.
         Cost tracks the deleted vectors' cell-file footprint after
         ``maintain()`` clustering, not the corpus."""
-        self.codes_table.delete_keys(
-            vec_ids.select("vec_id"), "vec_id", batch_token=batch_token
-        )
+        self.tables.delete_keys(vec_ids, "vec_id", batch_token=batch_token)
 
     def maintain(
         self, target_file_bytes: int = 128 * 1024 * 1024, keep_versions: int = 1
     ) -> int:
-        """Bin-pack the codes table CLUSTERED BY (cent_id, vec_id) —
-        each cell's codes land contiguously so an n_probe-cell probe
-        touches few files and refreshed zone maps prune the rest —
-        then vacuum; batch tokens survive. Returns files removed."""
-        from ..storage.compaction import compact_snapshot
-
-        compact_snapshot(
-            self.codes_table, target_file_bytes, sort_cols=["cent_id", "vec_id"]
-        )
-        return self.codes_table.vacuum(keep_versions)
+        """Bin-pack the codes table by (cent_id, vec_id), then vacuum;
+        batch tokens survive. Returns files removed."""
+        return self.tables.maintain(target_file_bytes, keep_versions)
 
 
 def _persisted_oracle() -> str:

@@ -291,23 +291,27 @@ class PQIndex:
     against the stored codes with the query set broadcast — held
     embeddings are re-read only for the per-query shortlist rows,
     never scanned wholesale.
+
+    Commit order: the codebook lands before the first batch's codes are
+    encoded, so a crash between the two commits leaves a pinned
+    codebook and no codes; the retried batch encodes against it.
     """
 
     def __init__(
         self, spark: SparkSession, root: str, train_iters: int = 0
     ):
-        from ..storage.snapshots import SnapshotTable
+        from ..storage.index_core import IndexTables
 
         self.spark = spark
         self.train_iters = train_iters
-        self.codebook_table = SnapshotTable(spark, f"{root}/codebook")
-        self.codes_table = SnapshotTable(spark, f"{root}/codes")
-
-    def _codebook(self) -> DataFrame | None:
-        try:
-            return self.codebook_table.read()
-        except FileNotFoundError:
-            return None
+        # maintain(): codes clustered by (vec_id, j) so each vector's
+        # PQ_M codes land contiguously and zone maps prune the shortlist
+        # re-reads; the codebook is pinned at creation
+        self.tables = IndexTables(
+            spark, root, {"codebook": None, "codes": ["vec_id", "j"]}
+        )
+        self.codebook_table = self.tables["codebook"]
+        self.codes_table = self.tables["codes"]
 
     def add_batch(
         self, emb: DataFrame, batch_token: str | None = None
@@ -319,7 +323,7 @@ class PQIndex:
         codebook silently trained empty would make every later encode
         join produce zero codes and the index would serve empty results
         with no error (ADVICE r9), so an incomplete codebook raises."""
-        cb = self._codebook()
+        cb = self.tables.read("codebook")
         if cb is None:
             built = (
                 pq_codebook_trained(emb, self.train_iters)
@@ -336,16 +340,7 @@ class PQIndex:
                 )
             self.codebook_table.append(built)
             cb = self.codebook_table.read()
-        snap = self.codes_table.snapshot()
-        if (
-            batch_token is not None
-            and snap is not None
-            and batch_token in snap.batch_tokens
-        ):
-            return snap  # replay: codes already held
-        return self.codes_table.append(
-            pq_encode(emb, cb), batch_token=batch_token
-        )
+        return self.tables.commit(batch_token, {"codes": pq_encode(emb, cb)})
 
     def topk(
         self,
@@ -360,7 +355,7 @@ class PQIndex:
         over everything ever added is pytest-pinned. An index with no
         codebook raises instead of silently joining against nothing
         (ADVICE r9)."""
-        cb = self._codebook()
+        cb = self.tables.read("codebook")
         if cb is None:
             raise FileNotFoundError(
                 "PQIndex has no codebook yet — add_batch a first batch "
@@ -376,26 +371,17 @@ class PQIndex:
         )
 
     def vec_count(self) -> int:
-        """Vectors held (codes rows / PQ_M) — metadata-scale."""
-        try:
-            return self.codes_table.read().count() // PQ_M
-        except FileNotFoundError:
-            return 0
+        """Vectors held (codes rows / PQ_M), from the manifest row stats
+        (no Spark job)."""
+        return self.codes_table.row_count() // PQ_M
 
     def maintain(
         self, target_file_bytes: int = 128 * 1024 * 1024, keep_versions: int = 1
     ) -> int:
-        """Bin-pack the codes table CLUSTERED BY (vec_id, j) — each
-        vector's PQ_M codes land contiguously and refreshed zone maps
-        prune the shortlist re-reads — then vacuum old snapshots; batch
-        tokens survive the rewrite (same contract as the other durable
-        indexes' ``maintain``). Returns files removed."""
-        from ..storage.compaction import compact_snapshot
-
-        compact_snapshot(
-            self.codes_table, target_file_bytes, sort_cols=["vec_id", "j"]
-        )
-        return self.codes_table.vacuum(keep_versions)
+        """Bin-pack the codes table by (vec_id, j), then vacuum old
+        snapshots; batch tokens survive the rewrite. Returns files
+        removed."""
+        return self.tables.maintain(target_file_bytes, keep_versions)
 
 
 def pq_adc_topk_with_queries(

@@ -1749,8 +1749,8 @@ def token_consistent_versions(*tables: "SnapshotTable") -> list[int | None]:
     """Pin a MULTI-table artifact to a token-consistent read frontier
     (ADVICE r10, medium): a writer that commits the same batch token to
     several SnapshotTables in sequence (``InvertedIndex.add_batch``:
-    postings then doclens; ``StatsCatalog.analyze``: counts then
-    sketches) has a window — crash between the two commits, or a
+    postings then doclens; ``StatsCatalog.analyze``: sketches then
+    counts) has a window — crash between the two commits, or a
     reader racing mid-stream — where one table already holds the batch
     the other lacks. Reading both at "latest" then serves statistics
     derived from MISMATCHED corpora (BM25 df from postings that include

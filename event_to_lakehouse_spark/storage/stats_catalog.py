@@ -31,6 +31,12 @@ directly. Rows are exact (counts are counts).
 compacts, so the sketch table is bounded at tables × keys × k rows
 forever (the RollupView/BloomIndex bounded-state discipline).
 
+Commit order (``index_core.IndexTables``): sketches, then counts, under
+one token. Every read pins both tables to a token-consistent frontier,
+so a crash between the two commits is invisible to readers until a
+retry with the same token skips the landed sketch commit and lands the
+counts.
+
 Reference parity: the reference has no statistics subsystem; this is
 the ops/maintenance tier of SURVEY §2's ABSENT fill, and the concrete
 backing for the audit gauges' manifest-stats claims.
@@ -44,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sketches import kmv_estimate, kmv_merge, kmv_sketch
-from .snapshots import SnapshotTable
+from .index_core import IndexTables
 
 __all__ = ["StatsCatalog", "CATALOG_K"]
 
@@ -57,8 +63,11 @@ class StatsCatalog:
         self.spark = spark
         self.root = Path(root)
         self.k = k
-        self.counts_table = SnapshotTable(spark, str(self.root / "counts"))
-        self.sketches_table = SnapshotTable(spark, str(self.root / "sketches"))
+        self.tables = IndexTables(
+            spark, self.root, {"sketches": ["tbl", "key"], "counts": ["tbl"]}
+        )
+        self.counts_table = self.tables["counts"]
+        self.sketches_table = self.tables["sketches"]
 
     def analyze(
         self,
@@ -69,9 +78,8 @@ class StatsCatalog:
     ):
         """One ANALYZE pass over a table batch: row count + a KMV
         k-min state per requested key, appended under the same
-        exactly-once token on both artifacts (the InvertedIndex
-        crash/replay contract: per-table token checks make a retry
-        converge)."""
+        exactly-once token on both artifacts (per-table token checks
+        make a retry converge)."""
         n = df.count()
         counts = self.spark.createDataFrame(
             [(tbl, n)], ["tbl", "n_rows"]
@@ -82,27 +90,15 @@ class StatsCatalog:
                 F.lit(tbl).alias("tbl"), F.lit(key).alias("key"), "hv"
             )
             sk = s if sk is None else sk.unionByName(s)
-
-        def _tokened(table: SnapshotTable, rows: DataFrame):
-            snap = table.snapshot()
-            if (
-                batch_token is not None
-                and snap is not None
-                and batch_token in snap.batch_tokens
-            ):
-                return snap
-            return table.append(rows, batch_token=batch_token)
-
-        _tokened(self.counts_table, counts)
-        return _tokened(self.sketches_table, sk)
+        return self.tables.commit(batch_token, {"sketches": sk, "counts": counts})
 
     # -- metadata-only reads -------------------------------------------------
     #
     # Every read pins BOTH artifacts to a token-consistent frontier
-    # (ADVICE r10: analyze commits counts then sketches under one
+    # (ADVICE r10: analyze commits sketches then counts under one
     # token; a reader racing that gap — or arriving after a crash —
-    # must not estimate selectivity from row counts that include a
-    # batch whose k-min states are missing).
+    # must not estimate selectivity from k-min states that include a
+    # batch whose row counts are missing).
 
     def _pinned(self) -> tuple[int | None, int | None]:
         from .snapshots import token_consistent_versions
@@ -217,8 +213,6 @@ class StatsCatalog:
         (a rewrite commit — the merged state is the canonical one
         under the merge law), compact + vacuum both tables. Bounded at
         tables × keys × k sketch rows forever."""
-        from .compaction import compact_snapshot
-
         snap = self.sketches_table.snapshot()
         folded = kmv_merge(
             self.sketches_table.read(), k=self.k
@@ -229,12 +223,7 @@ class StatsCatalog:
         self.sketches_table.overwrite(
             folded, parent_version=snap.version if snap else None
         )
-        compact_snapshot(
-            self.sketches_table, target_file_bytes, sort_cols=["tbl", "key"]
-        )
-        compact_snapshot(self.counts_table, target_file_bytes, sort_cols=["tbl"])
-        removed = self.sketches_table.vacuum(keep_versions)
-        return removed + self.counts_table.vacuum(keep_versions)
+        return self.tables.maintain(target_file_bytes, keep_versions)
 
 
 def _advise_oracle() -> str:

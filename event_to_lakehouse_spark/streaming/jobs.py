@@ -245,6 +245,18 @@ def purchase_attribution(
     )
 
 
+def _start(stream: DataFrame, write, checkpoint: str, available_now: bool):
+    """Start ``stream`` with ``write`` as its foreachBatch sink and
+    ``checkpoint`` as its checkpoint location; ``available_now`` runs
+    it as a finite availableNow query."""
+    writer = stream.writeStream.foreachBatch(write).option(
+        "checkpointLocation", checkpoint
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def run_to_completion(query) -> None:
     """Drive an availableNow query to its end (test/maintenance-job
     helper; production uses awaitAnyTermination like the reference
@@ -343,12 +355,7 @@ def neardup_index_stream(
             f"{pairs_path}/batch_id={batch_id}"
         )
 
-    writer = docs.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(docs, _write, checkpoint, available_now)
 
 
 def exact_dedup_index_stream(
@@ -372,12 +379,7 @@ def exact_dedup_index_stream(
         out = idx.index_batch(batch_df, batch_token=f"b{batch_id}")
         out.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
 
-    writer = docs.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(docs, _write, checkpoint, available_now)
 
 
 def bloom_admission_stream(
@@ -443,12 +445,7 @@ def bloom_admission_stream(
             fps.select("fp").distinct(), "fp", batch_token=f"b{batch_id}"
         )
 
-    writer = docs.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(docs, _write, checkpoint, available_now)
 
 
 def scd2_history_stream(
@@ -488,12 +485,7 @@ def scd2_history_stream(
             keep_tokens=token_horizon,
         )
 
-    writer = events.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(events, _write, checkpoint, available_now)
 
 
 def kmv_sketch_stream(
@@ -539,12 +531,7 @@ def kmv_sketch_stream(
         if vacuum_every and batch_id % vacuum_every == vacuum_every - 1:
             tbl.vacuum(keep_versions=2)
 
-    writer = events.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(events, _write, checkpoint, available_now)
 
 
 def trend_partials_stream(
@@ -597,12 +584,7 @@ def trend_partials_stream(
         if vacuum_every and batch_id % vacuum_every == vacuum_every - 1:
             tbl.vacuum(keep_versions=2)
 
-    writer = events.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(events, _write, checkpoint, available_now)
 
 
 def welch_partials_stream(
@@ -639,12 +621,7 @@ def welch_partials_stream(
         if vacuum_every and batch_id % vacuum_every == vacuum_every - 1:
             tbl.vacuum(keep_versions=2)
 
-    writer = events.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(events, _write, checkpoint, available_now)
 
 
 def user_type_counts_stream(
@@ -694,12 +671,7 @@ def user_type_counts_stream(
         if vacuum_every and batch_id % vacuum_every == vacuum_every - 1:
             tbl.vacuum(keep_versions=2)
 
-    writer = events.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(events, _write, checkpoint, available_now)
 
 
 def entropy_from_counts(counts: DataFrame) -> DataFrame:
@@ -759,12 +731,7 @@ def inverted_index_stream(
             batch_df.select("doc_id", "text"), batch_token=f"b{batch_id}"
         )
 
-    writer = docs.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(docs, _write, checkpoint, available_now)
 
 
 def expectations_gate_stream(
@@ -851,12 +818,7 @@ def expectations_gate_stream(
         )
         t.discard(sid)
 
-    writer = rows.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(rows, _write, checkpoint, available_now)
 
 
 def cdc_apply_stream(
@@ -900,12 +862,7 @@ def cdc_apply_stream(
             changelog=True,
         )
 
-    writer = changes.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(changes, _write, checkpoint, available_now)
 
 
 def target_encoder_stream(
@@ -972,9 +929,4 @@ def target_encoder_stream(
         if vacuum_every and batch_id % vacuum_every == vacuum_every - 1:
             tbl.vacuum(keep_versions=2)
 
-    writer = orders.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(orders, _write, checkpoint, available_now)

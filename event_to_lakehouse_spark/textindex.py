@@ -27,16 +27,17 @@ pins served == batch row-for-row, so the incremental path cannot
 drift from the certified math.
 
 Crash/replay contract: both tables carry the SAME exactly-once batch
-token; a replayed ``add_batch`` is a storage no-op per table, so a
-crash between the two commits self-heals on retry (the postings
-commit lands first; a retry skips it and completes the doc-length
-commit). While that gap is open — crash window or a concurrent reader
-mid-stream — ``topk`` stays CORRECT, not just available: it pins both
-tables to a token-consistent frontier
+token and commit in one order, postings then doc lengths, for adds and
+forgets alike (``storage.index_core.IndexTables``); a replayed
+``add_batch`` is a storage no-op per table, so a crash between the two
+commits self-heals on retry (a retry skips the landed postings commit
+and completes the doc-length commit). While that gap is open — crash
+window or a concurrent reader mid-stream — ``topk`` stays CORRECT, not
+just available: it pins both tables to a token-consistent frontier
 (``storage.snapshots.token_consistent_versions``), never scoring a
-half-committed batch's postings against stats that exclude it. Single concurrent writer per index root, like every durable
-index here (see the BloomIndex parent-anchoring note in
-``dedup/bloom.py``).
+half-committed batch's postings against stats that exclude it. Single
+concurrent writer per index root, like every durable index here (see
+the BloomIndex parent-anchoring note in ``dedup/bloom.py``).
 
 Reference parity: the reference ETL has no retrieval tier (SURVEY §2
 LLM-pipeline fill); the BM25 form follows Robertson-Sparck Jones idf
@@ -51,7 +52,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .operators.relational import query
-from .storage.snapshots import SnapshotTable
+from .storage.index_core import IndexTables
 from .tables import load_tables
 from .textops import BM25_B, BM25_K1, BM25_QUERY, BM25_TOPK
 
@@ -74,18 +75,26 @@ class InvertedIndex:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = Path(root)
-        self.postings_table = SnapshotTable(spark, str(self.root / "postings"))
-        self.doclens_table = SnapshotTable(spark, str(self.root / "doclens"))
+        # maintain(): postings clustered by (term, doc_id) so each
+        # term's posting list lands contiguously and a query's pruned
+        # scan opens few files
+        self.tables = IndexTables(
+            spark,
+            self.root,
+            {"postings": ["term", "doc_id"], "doclens": ["doc_id"]},
+        )
+        self.postings_table = self.tables["postings"]
+        self.doclens_table = self.tables["doclens"]
 
     def add_batch(self, docs: DataFrame, batch_token: str | None = None):
         """Tokenize the batch and append postings + doc lengths. Each
         table skips the commit if it already holds ``batch_token``, so
         replays (and crash retries) are no-ops that converge.
 
-        The batch is tokenized ONCE (r16, guide §1.2): the doc-length
-        commit derives from the PERSISTED postings frame — previously
-        each of the two appends re-ran the full explode + per-(doc,
-        term) count over the batch text (the build's dominant job)."""
+        The batch is tokenized ONCE: the doc-length commit derives from
+        the PERSISTED postings frame, released once both commits are
+        done — otherwise each of the two appends re-ran the full
+        explode + per-(doc, term) count over the batch text."""
         from pyspark import StorageLevel
 
         postings, _ = tokenize_postings(docs)
@@ -93,20 +102,10 @@ class InvertedIndex:
         doclens = postings.groupBy("doc_id").agg(
             F.sum("tf").cast("long").alias("dl")
         )
-
-        def _tokened(table: SnapshotTable, rows: DataFrame):
-            snap = table.snapshot()
-            if (
-                batch_token is not None
-                and snap is not None
-                and batch_token in snap.batch_tokens
-            ):
-                return snap
-            return table.append(rows, batch_token=batch_token)
-
         try:
-            _tokened(self.postings_table, postings)
-            return _tokened(self.doclens_table, doclens)
+            return self.tables.commit(
+                batch_token, {"postings": postings, "doclens": doclens}
+            )
         finally:
             postings.unpersist()
 
@@ -126,26 +125,11 @@ class InvertedIndex:
         the doc-length table), serving after a delete EQUALS a fresh
         index over the surviving docs — no ghost postings, no df/idf
         skew from forgotten documents (pytest-pinned served ==
-        recompute). Both tables take the SAME ``batch_token``, so a
-        crash between the two commits self-heals on retry and the
-        ``token_consistent_versions`` pin keeps a racing reader on the
-        pre-delete frontier until both land."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        # independent tables, same token: overlap the two COW rewrites
-        # (guide §2.6); either may land first — the non-atomicity of
-        # the pair is pre-existing and handled by the token pin above.
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            fut = pool.submit(
-                self.doclens_table.delete_keys,
-                doc_ids,
-                "doc_id",
-                batch_token=batch_token,
-            )
-            self.postings_table.delete_keys(
-                doc_ids, "doc_id", batch_token=batch_token
-            )
-            fut.result()
+        recompute). Both tables take the SAME ``batch_token``,
+        postings first, so a crash between the two commits self-heals
+        on retry and the ``token_consistent_versions`` pin keeps a
+        racing reader on the pre-delete frontier until both land."""
+        self.tables.delete_keys(doc_ids, "doc_id", batch_token=batch_token)
 
     def sync_from_changelog(
         self,
@@ -343,20 +327,10 @@ class InvertedIndex:
     def maintain(
         self, target_file_bytes: int = 128 * 1024 * 1024, keep_versions: int = 1
     ) -> int:
-        """Bin-pack postings CLUSTERED BY (term, doc_id) — each term's
-        posting list lands contiguously so a query's pruned scan opens
-        few files — and doc lengths by doc_id; then vacuum both.
-        Batch tokens survive. Returns files removed."""
-        from .storage.compaction import compact_snapshot
-
-        compact_snapshot(
-            self.postings_table, target_file_bytes, sort_cols=["term", "doc_id"]
-        )
-        compact_snapshot(
-            self.doclens_table, target_file_bytes, sort_cols=["doc_id"]
-        )
-        removed = self.postings_table.vacuum(keep_versions)
-        return removed + self.doclens_table.vacuum(keep_versions)
+        """Bin-pack postings by (term, doc_id) and doc lengths by
+        doc_id, then vacuum both. Batch tokens survive. Returns files
+        removed."""
+        return self.tables.maintain(target_file_bytes, keep_versions)
 
 
 def _persisted_oracle() -> str:

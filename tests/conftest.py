@@ -14,6 +14,19 @@ sys.path.insert(0, str(REPO))
 SF_SMALL = "/root/testdata/sf0.001"
 
 
+def drain(*queries) -> None:
+    """Run each streaming query until it has processed all available
+    input, stop it, and re-raise the error it stopped on. Unlike a
+    timed ``awaitTermination``, a slow host cannot let the test read
+    the sink before the query is done, and a failed query fails the
+    test."""
+    for q in queries:
+        q.processAllAvailable()
+        q.stop()
+        if q.exception() is not None:
+            raise q.exception()
+
+
 @pytest.fixture(scope="session")
 def spark():
     from event_to_lakehouse_spark.session import get_spark

@@ -117,7 +117,7 @@ def test_bloom_index_union_equivalence(spark, tmp_dir):
     idx = BloomIndex(spark, f"{tmp_dir}/bf", m_bits=m)
     idx.add_batch(_keys(spark, "a-", 200), "k", batch_token="b1")
     idx.add_batch(_keys(spark, "b-", 200), "k", batch_token="b2")
-    got = {(r.word_idx, r.word) for r in idx._stored().collect()}
+    got = {(r.word_idx, r.word) for r in idx.table.read().collect()}
     want = {
         (r.word_idx, r.word)
         for r in build_bloom(
@@ -190,7 +190,7 @@ def test_bloom_add_batch_anchored_merge_survives_race(spark, tmp_dir):
         .unionAll(_keys(spark, "b-", 200))
         .unionAll(_keys(spark, "c-", 200))
     )
-    got = {(r.word_idx, r.word) for r in idx._stored().collect()}
+    got = {(r.word_idx, r.word) for r in idx.table.read().collect()}
     want = {(r.word_idx, r.word) for r in build_bloom(union, "k", m).collect()}
     assert got == want  # no batch's bits were dropped
     assert idx.probe(union, "k").filter(~F.col("bloom_maybe")).count() == 0

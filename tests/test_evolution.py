@@ -12,6 +12,7 @@ from event_to_lakehouse_spark.registry.evolution import (
     conform,
     diff_schemas,
 )
+from tests.conftest import drain
 
 V1 = T.StructType(
     [
@@ -145,7 +146,7 @@ def test_conform_in_stream_mid_evolution(spark, tmp_dir):
         .foreachBatch(_write)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q)
     back = {r.id: (r.name, r.region) for r in spark.read.parquet(out).collect()}
     assert back == {1: ("a", None), 2: ("b", "emea")}
 

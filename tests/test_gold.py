@@ -27,6 +27,7 @@ from event_to_lakehouse_spark.pipeline.normalize import (
     silver_union,
     write_silver_batch,
 )
+from tests.conftest import drain
 from tests.test_pipeline_golden import FORTI_SCHEMA, RAPID7_SCHEMA
 
 
@@ -107,7 +108,7 @@ def test_streaming_gold_refresh(spark, rapid7_bronze, forti_bronze, tmp_dir):
     q = start_gold_refresh_stream(
         spark, silver_path, gold_root, checkpoint=f"{tmp_dir}/gold_ckpt"
     )
-    q.awaitTermination(120)
+    drain(q)
     cur = spark.read.parquet(f"{gold_root}/current_assets")
     posture = spark.read.parquet(f"{gold_root}/asset_posture")
     assert cur.count() > 0

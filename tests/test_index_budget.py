@@ -9,15 +9,18 @@ exchange that creeps back into one of them fails the budget."""
 
 from __future__ import annotations
 
+import gc
+import time
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from event_to_lakehouse_spark.tables import load_tables
 from tests.conftest import SF_SMALL as SF
 
 #: Jobs per call on the fixture below (``<=``: fewer is fine).
-EXACT_INDEX_BATCH_JOBS = 8  # bloom-gated index_batch + collect
+EXACT_INDEX_BATCH_JOBS = 7  # bloom-gated index_batch + collect
 NEARDUP_INDEX_BATCH_JOBS = 13  # index_batch + collect
 IVFPQ_TOPK_JOBS = 11  # one query, collected
 
@@ -154,20 +157,35 @@ def test_inverted_index_doc_count_is_manifest_read(spark, tmp_dir):
     assert _no_jobs(spark, idx.doc_count) == _scan(idx.doclens_table) == 375
 
 
-def test_ivfpq_index_vec_count_is_manifest_read(spark, tmp_dir):
+def _ivfpq_index(spark, root, emb):
     from event_to_lakehouse_spark.similarity.ivfpq import IVFPQIndex
+
+    return IVFPQIndex.build(spark, root, train=emb)
+
+
+def _pq_index(spark, root, emb):
+    from event_to_lakehouse_spark.similarity.pq import PQIndex
+
+    return PQIndex(spark, root)
+
+
+@pytest.mark.parametrize("make", [_ivfpq_index, _pq_index], ids=["ivfpq", "pq"])
+def test_vector_index_vec_count_is_manifest_read(spark, tmp_dir, make):
+    """The first batch holds the PQ seed rows (vec_id < PQ_K), which
+    PQIndex trains its codebook from. PQIndex has no delete path."""
     from event_to_lakehouse_spark.similarity.pq import PQ_M
 
     emb = _emb(spark)
-    idx = IVFPQIndex.build(spark, f"{tmp_dir}/ivfpq", train=emb)
+    idx = make(spark, f"{tmp_dir}/idx", emb)
     assert _no_jobs(spark, idx.vec_count) == 0
-    idx.add_batch(emb.filter("vec_id % 2 = 0"), batch_token="even")
-    idx.add_batch(emb.filter("vec_id % 2 = 1"), batch_token="odd")
-    n = emb.count()
-    assert _no_jobs(spark, idx.vec_count) == _scan(idx.codes_table) // PQ_M == n
-    idx.delete_vecs(emb.filter("vec_id % 4 = 0").select("vec_id"), batch_token="d")
-    left = emb.filter("vec_id % 4 != 0").count()
+    idx.add_batch(emb.filter("vec_id < 250"), batch_token="b1")
+    idx.add_batch(emb.filter("vec_id >= 250"), batch_token="b2")
+    left = emb.count()
     assert _no_jobs(spark, idx.vec_count) == _scan(idx.codes_table) // PQ_M == left
+    if hasattr(idx, "delete_vecs"):
+        idx.delete_vecs(emb.filter("vec_id % 4 = 0").select("vec_id"), batch_token="d")
+        left = emb.filter("vec_id % 4 != 0").count()
+        assert _no_jobs(spark, idx.vec_count) == _scan(idx.codes_table) // PQ_M == left
     idx.maintain()
     assert _no_jobs(spark, idx.vec_count) == _scan(idx.codes_table) // PQ_M == left
 
@@ -192,18 +210,75 @@ def test_bloom_index_word_count_is_manifest_read(spark, tmp_dir):
 # -- cached blocks ---------------------------------------------------------------
 
 
-def test_inverted_index_add_batch_releases_its_cache(spark, tmp_dir):
-    """add_batch persists the tokenized postings for its two commits and
-    releases them once both have landed: a long ingest loop must not
-    accrete cached blocks."""
+def _exact_with_bloom(spark, root):
+    from event_to_lakehouse_spark.dedup.bloom import BloomIndex, bloom_bits
+    from event_to_lakehouse_spark.dedup.incremental import ExactDedupIndex
+
+    idx = ExactDedupIndex(spark, f"{root}/exact")
+    bloom = BloomIndex(spark, f"{root}/bloom", m_bits=bloom_bits(1000))
+
+    def step(docs, token):
+        idx.index_batch(docs, batch_token=token, bloom=bloom).collect()
+
+    return step, idx
+
+
+def _neardup(spark, root):
+    from event_to_lakehouse_spark.dedup.incremental import NearDupIndex
+
+    idx = NearDupIndex(spark, f"{root}/nd", hash_flavor="portable")
+
+    def step(docs, token):
+        idx.index_batch(docs, batch_token=token).collect()
+
+    return step, idx
+
+
+def _inverted(spark, root):
     from event_to_lakehouse_spark.textindex import InvertedIndex
 
-    def cached() -> set[int]:
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    idx = InvertedIndex(spark, f"{root}/inv")
 
+    def step(docs, token):
+        idx.add_batch(docs, batch_token=token)
+
+    return step, idx
+
+
+@pytest.mark.parametrize(
+    "write_path",
+    [_exact_with_bloom, _neardup, _inverted],
+    ids=["exact_bloom", "neardup", "inverted"],
+)
+def test_write_path_releases_its_cache(spark, tmp_dir, write_path):
+    """Three batches through one ingest write path leave no cached RDD
+    behind: a long ingest loop must not accrete cached blocks. A
+    ``persist()`` must be released by the write path itself — the
+    cache manager holds it until then. The blocks of a
+    ``localCheckpoint`` go with the last frame that reads them, so the
+    check lets a garbage collection run first. The map
+    ``getPersistentRDDs()`` returns holds its RDDs too, until py4j's
+    finalizer thread (1 s poll) releases it, so each round waits for
+    that before the JVM collects."""
+    sc = spark.sparkContext
+
+    def cached() -> set[int]:
+        return set(sc._jsc.getPersistentRDDs().keys())
+
+    def grown(before: set[int]) -> set[int]:
+        for _ in range(10):
+            gc.collect()
+            time.sleep(1.5)
+            sc._jvm.System.gc()
+            left = cached() - before
+            if not left:
+                break
+        return left
+
+    step, idx = write_path(spark, tmp_dir)
     before = cached()  # other tests' frames share this session
-    idx = InvertedIndex(spark, f"{tmp_dir}/inv")
-    idx.add_batch(_docs(spark).filter("doc_id < 250"), batch_token="b1")
-    idx.add_batch(_docs(spark).filter("doc_id >= 250"), batch_token="b2")
-    assert cached() - before == set()
-    assert idx.doc_count() == 500
+    docs = _docs(spark)
+    for i in range(3):
+        step(docs.filter(f"doc_id % 3 = {i}"), f"b{i}")
+    assert grown(before) == set()
+    assert idx.doc_count() > 0

@@ -387,14 +387,14 @@ def test_exact_index_forget_and_content_forget(spark, tmp_dir):
 
     gone = held.filter(F.col("doc_id") % 9 == 0).select("doc_id")
     idx.delete_docs(gone, batch_token="forget")
-    assert idx._stored().join(gone, "doc_id", "semi").count() == 0
+    assert idx.table.read().join(gone, "doc_id", "semi").count() == 0
 
     # a deleted doc's content re-arrives: is_new_unique again
     reprobe = held.filter(F.col("doc_id") % 9 == 0)
     out = idx.index_batch(reprobe, batch_token="rearrival")
     per_doc = {r.doc_id: r for r in out.collect()}
     # each distinct content's min-id holder is new-unique; none dup a ghost
-    survivors = {r.doc_id for r in idx._stored().collect()}
+    survivors = {r.doc_id for r in idx.table.read().collect()}
     for r in per_doc.values():
         if r.dup_of is not None:
             assert r.dup_of in survivors or r.dup_of in per_doc
@@ -515,6 +515,160 @@ def test_exact_index_bitmap_first_crash_retry(spark, tmp_dir):
     assert fut == {9: (False, 2)}
 
 
+# -- crash between two manifests ----------------------------------------------
+#
+# Each multi-table write commits its tables one after another in the
+# order its class declares (storage.index_core). A writer killed after
+# the first commit leaves that table ahead; the replay with the same
+# token must skip it, land the rest, and leave every table — and so
+# every later answer — equal to an index that never crashed: nothing
+# the uncrashed index holds is missing.
+
+
+class _Killed(BaseException):
+    pass
+
+
+def _neardup_index(spark, root, first):
+    from event_to_lakehouse_spark.dedup.incremental import NearDupIndex
+
+    docs = _docs(spark).select("doc_id", "text")
+    idx = NearDupIndex(spark, root, hash_flavor="portable")
+    idx.index_batch(docs.filter("doc_id < 300"), batch_token="held")
+    batch = docs.filter("doc_id >= 300")
+    first(lambda: idx.index_batch(batch, batch_token="b1"))
+    pairs = idx.index_batch(batch, batch_token="b1").collect()
+    return idx.tables, sorted(map(tuple, pairs))
+
+
+def _neardup_forget(spark, root, first):
+    from event_to_lakehouse_spark.dedup.incremental import NearDupIndex
+
+    docs = _docs(spark).select("doc_id", "text")
+    idx = NearDupIndex(spark, root, hash_flavor="portable")
+    idx.index_batch(docs, batch_token="held")
+    gone = docs.filter("doc_id % 3 = 0").select("doc_id")
+    first(lambda: idx.delete_docs(gone, batch_token="forget"))
+    idx.delete_docs(gone, batch_token="forget")
+    return idx.tables, idx.doc_count()
+
+
+def _inverted(spark, root, first, forget):
+    from event_to_lakehouse_spark.textindex import InvertedIndex
+    from event_to_lakehouse_spark.textops import BM25_QUERY
+
+    docs = _docs(spark).select("doc_id", "text")
+    idx = InvertedIndex(spark, root)
+    idx.add_batch(docs.filter("doc_id < 300"), batch_token="b0")
+    if forget:
+        gone = docs.filter("doc_id % 4 = 0").select("doc_id")
+        op = lambda: idx.delete_docs(gone, batch_token="forget")  # noqa: E731
+    else:
+        batch = docs.filter("doc_id >= 300")
+        op = lambda: idx.add_batch(batch, batch_token="b1")  # noqa: E731
+    first(op)
+    op()
+    return idx.tables, [tuple(r) for r in idx.topk(BM25_QUERY).collect()]
+
+
+def _inverted_add(spark, root, first):
+    return _inverted(spark, root, first, forget=False)
+
+
+def _inverted_forget(spark, root, first):
+    return _inverted(spark, root, first, forget=True)
+
+
+def _stats_analyze(spark, root, first):
+    from event_to_lakehouse_spark.storage.stats_catalog import StatsCatalog
+
+    t = load_tables(spark, SF)
+    cat = StatsCatalog(spark, root)
+    cat.analyze("customer", t["customer"], ["c_custkey"], batch_token="c")
+    op = lambda: cat.analyze(  # noqa: E731
+        "orders", t["orders"], ["o_custkey"], batch_token="o"
+    )
+    first(op)
+    op()
+    advice = cat.advise_join("customer", "c_custkey", "orders", "o_custkey")
+    return cat.tables, advice.collect()
+
+
+def _ivfpq_build(spark, root, first):
+    from event_to_lakehouse_spark.similarity.ivfpq import IVFPQIndex
+
+    emb = load_tables(spark, SF)["embeddings"].select("vec_id", "embedding")
+    op = lambda: IVFPQIndex.build(spark, root, train=emb)  # noqa: E731
+    first(op)
+    idx = op()
+    idx.add_batch(emb, batch_token="all")
+    top = idx.topk(emb, emb.filter("vec_id < 5"), k=5).collect()
+    return idx.tables, (idx.n_centroids, sorted(map(tuple, top)))
+
+
+@pytest.mark.parametrize(
+    "scenario, table, method",
+    [
+        (_neardup_index, "sigs", "append"),
+        (_neardup_forget, "sigs", "delete_keys"),
+        (_inverted_add, "doclens", "append"),
+        (_inverted_forget, "doclens", "delete_keys"),
+        (_stats_analyze, "counts", "append"),
+        (_ivfpq_build, "codebook", "append"),
+    ],
+    ids=[
+        "neardup_index",
+        "neardup_forget",
+        "inverted_add",
+        "inverted_forget",
+        "stats_analyze",
+        "ivfpq_build",
+    ],
+)
+def test_multi_table_write_crash_replay_converges(
+    spark, tmp_dir, scenario, table, method
+):
+    """Kill the second table's commit of one multi-table write, replay
+    the write with the same token, and compare every table and the
+    served answer with the same scenario run without the crash."""
+    from unittest import mock
+
+    def untouched(op):
+        pass
+
+    ref_tables, ref_answer = scenario(spark, f"{tmp_dir}/ref", untouched)
+
+    real = getattr(SnapshotTable, method)
+    killed = []
+
+    def dying(self, *args, **kwargs):
+        if self.root.name == table:
+            killed.append(self.root)
+            raise _Killed()
+        return real(self, *args, **kwargs)
+
+    def crash(op):
+        with mock.patch.object(SnapshotTable, method, dying):
+            with pytest.raises(_Killed):
+                op()
+
+    tables, answer = scenario(spark, f"{tmp_dir}/crash", crash)
+    assert killed, "the crash never reached the second table"
+
+    def contents(core):
+        out = {}
+        for name, t in core.tables.items():
+            rows, snap = core.read(name), t.snapshot()
+            out[name] = (
+                None if rows is None else sorted(repr(tuple(r)) for r in rows.collect()),
+                None if snap is None else snap.batch_tokens,
+            )
+        return out
+
+    assert contents(tables) == contents(ref_tables)
+    assert answer == ref_answer
+
+
 # -- IVFPQ index -------------------------------------------------------------
 
 
@@ -577,7 +731,7 @@ def test_bloom_rebuild_from_survivors(spark, tmp_dir):
         (r.word_idx, r.word)
         for r in build_bloom(survivors, "fp", m, idx.k).collect()
     }
-    got = {(r.word_idx, r.word) for r in idx._stored().collect()}
+    got = {(r.word_idx, r.word) for r in idx.table.read().collect()}
     assert got == want
     # no false negatives for survivors
     probed = idx.probe(survivors, "fp")
@@ -625,7 +779,7 @@ def test_bloom_sync_from_changelog_and_replay_noop(spark, tmp_dir):
         for r in build_bloom(survivors, "fp", m, idx.k).collect()
     }
     v_after = idx.table.snapshot().version
-    got = {(r.word_idx, r.word) for r in idx._stored().collect()}
+    got = {(r.word_idx, r.word) for r in idx.table.read().collect()}
     assert got == want
     assert idx.probe(survivors, "fp").filter(
         ~F.col("bloom_maybe")
@@ -636,7 +790,7 @@ def test_bloom_sync_from_changelog_and_replay_noop(spark, tmp_dir):
                   batch_token="b0")
     assert idx.table.snapshot().version == v_after
     assert {
-        (r.word_idx, r.word) for r in idx._stored().collect()
+        (r.word_idx, r.word) for r in idx.table.read().collect()
     } == want  # deleted keys' bits did NOT resurrect
 
     # replay the SYNC itself: no-op too

@@ -14,6 +14,7 @@ import math
 import numpy as np
 import pandas as pd
 import pytest
+from tests.conftest import drain
 
 SF = "/root/testdata/sf0.001"
 
@@ -388,7 +389,7 @@ def test_welch_partials_stream_equals_batch(spark, tmp_dir):
     stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
     state_root = f"{tmp_dir}/welch_state"
     q = welch_partials_stream(stream, state_root, f"{tmp_dir}/ckpt")
-    q.awaitTermination(120)
+    drain(q)
 
     tbl = SnapshotTable(spark, state_root)
     batch = spark.read.json(str(src), schema=stream.schema)

@@ -21,6 +21,7 @@ from event_to_lakehouse_spark.pipeline.normalize import (
     start_silver_stream,
     write_silver_batch,
 )
+from tests.conftest import drain
 
 RAPID7_SCHEMA = T.StructType(
     [
@@ -88,18 +89,6 @@ FORTI_SCHEMA = T.StructType(
 )
 
 CONTRACT_COLS = [name for name, _ in SILVER_ASSETS_CONTRACT]
-
-
-def _drain(*queries) -> None:
-    """Run each streaming query until it has processed all available
-    input, stop it, and re-raise the error it stopped on. Unlike a
-    timed ``awaitTermination``, a slow host cannot let the test read
-    the sink before the query is done."""
-    for q in queries:
-        q.processAllAvailable()
-        q.stop()
-        if q.exception() is not None:
-            raise q.exception()
 
 
 def test_rapid7_golden(spark, rapid7_bronze):
@@ -181,7 +170,7 @@ def test_streaming_silver_end_to_end(spark, rapid7_bronze, tmp_dir):
     q = start_silver_stream(
         silver, f"{tmp_dir}/silver", f"{tmp_dir}/ckpt", idempotent=True
     )
-    _drain(q)
+    drain(q)
     back = spark.read.parquet(f"{tmp_dir}/silver")
     assert back.count() == 2  # corrupt row filtered in-stream
     assert set(back.select("rapid7_id").toPandas()["rapid7_id"]) == {"101", "102"}
@@ -213,7 +202,7 @@ def test_two_concurrent_silver_streams(spark, rapid7_bronze, forti_bronze, tmp_d
     )
     # both queries run concurrently in this session until drained
     assert {q.id for q in spark.streams.active} >= {q1.id, q2.id}
-    _drain(q1, q2)
+    drain(q1, q2)
     back = spark.read.parquet(out)
     assert back.count() == 4
     assert {
@@ -299,7 +288,7 @@ def test_writer_id_no_collision_for_same_leaf_checkpoints(
         out,
         f"{tmp_dir}/b/checkpoint",
     )
-    _drain(q1, q2)
+    drain(q1, q2)
     batch_dirs = {
         p.name for p in Path(out).iterdir() if p.name.startswith("batch_id=")
     }

@@ -235,7 +235,10 @@ def test_incremental_index_probes_never_shuffle_the_index(spark, tmp_dir):
     SortMergeJoin anywhere, every join broadcast-built; the only
     shuffles belong to BATCH-side aggregation/ranking. A regression
     that makes the index ride a shuffle fails here."""
+    from unittest import mock
+
     from pyspark.sql import functions as F
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
     from event_to_lakehouse_spark.dedup.incremental import ExactDedupIndex
     from event_to_lakehouse_spark.similarity.ivf_index import IVFIndex
@@ -244,18 +247,28 @@ def test_incremental_index_probes_never_shuffle_the_index(spark, tmp_dir):
     docs = load_tables(spark, SF_DIR)["documents"]
     edi = ExactDedupIndex(spark, f"{tmp_dir}/ex")
     edi.index_batch(docs.filter(F.col("doc_id") % 2 == 0), batch_token="held")
-    probe = edi.index_batch(
-        docs.filter(F.col("doc_id") % 2 == 1), batch_token="new"
-    )
-    a = audit_plan(probe)
+    # The probe result is served off the LOCAL CHECKPOINT of the
+    # per-document resolution, so its own plan is a scan of that
+    # checkpoint; the probe's joins live in the frame index_batch
+    # checkpoints, which is the plan audited here.
+    checkpointed = []
+    real = ClassicDataFrame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        checkpointed.append(self)
+        return real(self, *args, **kwargs)
+
+    with mock.patch.object(ClassicDataFrame, "localCheckpoint", spy):
+        edi.index_batch(docs.filter(F.col("doc_id") % 2 == 1), batch_token="new")
+    (resolution,) = checkpointed
+    a = audit_plan(resolution)
     assert a.sort_merge_joins == 0
     assert a.broadcast_hash_joins >= 1  # the fp semi-probe + resolution
     # The only batch-side shuffle is the survivor window over fp; the
-    # probe result is served off the PERSISTED resolution frame, and
-    # the formatted plan embeds the cached subtree, so that shuffle is
-    # counted again through the persist boundary. At runtime it
-    # executes once (at cache materialization); the INDEX side never
-    # shuffles — which the sort_merge_joins == 0 assertion pins.
+    # checkpoint call has already run the adaptive plan's stages, so
+    # the formatted plan lists that exchange in both its initial and
+    # its final plan. The INDEX side never shuffles — which the
+    # sort_merge_joins == 0 assertion pins.
     assert a.shuffle_exchanges <= 2
 
     emb = load_tables(spark, SF_DIR)["embeddings"].select("vec_id", "embedding")

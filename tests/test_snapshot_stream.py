@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from event_to_lakehouse_spark.sources import snapshot_stream
 from event_to_lakehouse_spark.storage.snapshots import SnapshotTable
+from tests.conftest import drain
 
 
 def _drain(spark, root: str, out: str, ckpt: str, **opts) -> None:
@@ -25,7 +26,7 @@ def _drain(spark, root: str, out: str, ckpt: str, **opts) -> None:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q)
 
 
 def test_stream_consumes_each_commit_exactly_once(spark, tmp_dir):
@@ -134,7 +135,7 @@ def test_cdc_stream_drives_incremental_gold_merge(spark, tmp_dir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        drain(q)
 
     rows1 = spark.createDataFrame(
         [(1, 10.0), (1, 5.0), (2, 2.0)], ["user_id", "value"]

@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from event_to_lakehouse_spark.storage.snapshots import SnapshotTable
+from tests.conftest import drain
 
 
 def _batch(spark, lo, n):
@@ -351,7 +352,7 @@ def test_silver_stream_into_snapshot_table(spark, rapid7_bronze, tmp_dir):
         .foreachBatch(_write)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q)
     assert t.read().count() == 2  # corrupt row filtered upstream
     # replaying the same batch is a no-op
     v = t.snapshot().version

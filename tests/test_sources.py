@@ -15,6 +15,7 @@ from event_to_lakehouse_spark.sources.connectors import (
     read_files,
     write_files,
 )
+from tests.conftest import drain
 
 SCHEMA = T.StructType(
     [
@@ -129,7 +130,7 @@ def test_kafka_stream_roundtrip_without_broker(spark, tmp_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q)
     rows = {r.offset: r for r in spark.sql("SELECT * FROM kafka_rt").collect()}
 
     good, bad = rows[42], rows[43]

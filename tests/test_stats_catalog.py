@@ -135,9 +135,10 @@ def test_maintain_bounds_state_and_preserves_answers(spark, tmp_dir):
 
 
 def test_reads_pin_token_consistent_frontier(spark, tmp_dir):
-    """ADVICE r10 (medium): analyze commits counts then sketches under
-    one token; a reader in that gap must not combine row counts that
-    include a batch with k-min states that exclude it. row_stats /
+    """ADVICE r10 (medium): analyze commits two tables under one
+    token; a reader that finds one table ahead of the other must not
+    combine row counts that include a batch with k-min states that
+    exclude it (or the reverse). row_stats /
     ndv_estimate / advise_join pin both artifacts to the newest
     token-consistent frontier, so mid-gap reads equal pre-batch reads."""
     t = load_tables(spark, SF)

@@ -19,6 +19,7 @@ from event_to_lakehouse_spark.streaming.jobs import (
     session_windows,
     windowed_counts,
 )
+from tests.conftest import drain
 
 
 def _write_events(dir_: str, events: list[dict]) -> str:
@@ -56,7 +57,7 @@ def test_windowed_counts(spark, tmp_dir):
     stream = read_event_stream(spark, src)
     name = f"win_{uuid.uuid4().hex[:8]}"
     q = _mem_query(windowed_counts(stream, "1 hour"), name, "complete")
-    q.awaitTermination(120)
+    drain(q)
     rows = {
         (str(r.window_start), r.event_type): r.n_events
         for r in spark.sql(f"select * from {name}").collect()
@@ -71,7 +72,7 @@ def test_session_windows(spark, tmp_dir):
     stream = read_event_stream(spark, src)
     name = f"sess_{uuid.uuid4().hex[:8]}"
     q = _mem_query(session_windows(stream, gap="30 minutes"), name, "complete")
-    q.awaitTermination(120)
+    drain(q)
     rows = spark.sql(f"select * from {name}").collect()
     by_user = {}
     for r in rows:
@@ -86,7 +87,7 @@ def test_dedup_within_watermark(spark, tmp_dir):
     stream = read_event_stream(spark, src)
     name = f"dedup_{uuid.uuid4().hex[:8]}"
     q = _mem_query(dedup_within_watermark(stream, ["event_id"]), name, "append")
-    q.awaitTermination(120)
+    drain(q)
     rows = spark.sql(f"select * from {name}").collect()
     ids = [r.event_id for r in rows]
     assert sorted(ids) == [1, 2, 3, 4]  # duplicate event_id=2 dropped
@@ -99,7 +100,7 @@ def test_running_user_totals_stateful(spark, tmp_dir):
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
     name = f"tot_{uuid.uuid4().hex[:8]}"
     q = _mem_query(running_user_totals(stream), name, "update")
-    q.awaitTermination(120)
+    drain(q)
     latest = {
         r.user_id: r
         for r in spark.sql(
@@ -157,7 +158,7 @@ def test_running_user_totals_transform_with_state(spark, tmp_dir):
         with rocksdb_state_store(spark):
             q = _mem_query(running_user_totals_tws(stream), name, "update")
         assert spark.conf.get(provider_key, None) == prev_provider
-        q.awaitTermination(120)
+        drain(q)
     except StreamingQueryException as e:
         gated = (
             "STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE" in str(e)
@@ -193,7 +194,7 @@ def test_purchase_attribution_stream_join(spark, tmp_dir):
     stream = read_event_stream(spark, src)
     name = f"attr_{uuid.uuid4().hex[:8]}"
     q = _mem_query(purchase_attribution(stream, horizon="1 hour"), name, "append")
-    q.awaitTermination(120)
+    drain(q)
     rows = spark.sql(f"select * from {name}").collect()
     assert len(rows) == 1  # user 6's click is outside the horizon
     assert rows[0].purchase_id == 11 and rows[0].click_id == 10
@@ -250,7 +251,7 @@ def test_dedup_documents_stream(spark, tmp_dir):
         .outputMode("append")
         .start()
     )
-    q.awaitTermination(120)
+    drain(q)
     out = spark.sql("SELECT doc_id FROM doc_dedup").collect()
     ids = sorted(r.doc_id for r in out)
     # doc 2 is a normalization-identical re-crawl of doc 1 → dropped
@@ -295,7 +296,7 @@ def test_stream_static_enrichment(spark, tmp_dir):
         .outputMode("append")
         .start()
     )
-    q.awaitTermination(120)
+    drain(q)
     out = {r.event_id: r.c_mktsegment for r in
            spark.sql("SELECT event_id, c_mktsegment FROM enriched_events").collect()}
     assert out[1] is not None      # known customer enriched
@@ -320,7 +321,7 @@ def test_heavyhitters_sketch_stream_equals_batch(spark, tmp_dir):
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
     name = f"cm_{uuid.uuid4().hex[:8]}"
     q = _mem_query(heavyhitters_sketch_stream(stream), name, "complete")
-    q.awaitTermination(120)
+    drain(q)
     got = {
         (r.j, r.bucket): r.c for r in spark.sql(f"select * from {name}").collect()
     }
@@ -400,7 +401,7 @@ def test_neardup_index_stream_union_equals_batch(spark, tmp_dir):
         pairs_path=f"{tmp_dir}/pairs",
         checkpoint=f"{tmp_dir}/ckpt",
     )
-    q.awaitTermination(120)
+    drain(q)
 
     got = {
         (r.doc_id_a, r.doc_id_b, r.jaccard_est)
@@ -427,7 +428,7 @@ def test_neardup_index_stream_union_equals_batch(spark, tmp_dir):
         pairs_path=f"{tmp_dir}/pairs",
         checkpoint=f"{tmp_dir}/ckpt",
     )
-    q2.awaitTermination(120)
+    drain(q2)
     assert NearDupIndex(spark, f"{tmp_dir}/idx").bands_table.snapshot().version == v
     assert {
         (r.doc_id_a, r.doc_id_b, r.jaccard_est)
@@ -482,7 +483,7 @@ def test_exact_dedup_index_stream_cross_batch(spark, tmp_dir):
         out_path=f"{tmp_dir}/out",
         checkpoint=f"{tmp_dir}/ckpt",
     )
-    q.awaitTermination(120)
+    drain(q)
     got = {
         r.doc_id: (r.is_new_unique, r.dup_of)
         for r in spark.read.parquet(f"{tmp_dir}/out").collect()
@@ -548,7 +549,7 @@ def test_scd2_history_stream_equals_batch(spark, tmp_dir):
     q = scd2_history_stream(
         stream, table_root=f"{tmp_dir}/scd2", checkpoint=f"{tmp_dir}/ckpt"
     )
-    q.awaitTermination(120)
+    drain(q)
 
     got = (
         SnapshotTable(spark, f"{tmp_dir}/scd2", stats_col="hist_key")
@@ -571,7 +572,7 @@ def test_scd2_history_stream_equals_batch(spark, tmp_dir):
     q2 = scd2_history_stream(
         stream, table_root=f"{tmp_dir}/scd2", checkpoint=f"{tmp_dir}/ckpt"
     )
-    q2.awaitTermination(60)
+    drain(q2)
     assert (
         SnapshotTable(spark, f"{tmp_dir}/scd2", stats_col="hist_key").snapshot().version
         == v_before
@@ -621,7 +622,7 @@ def test_kmv_sketch_stream_equals_batch(spark, tmp_dir):
     q = kmv_sketch_stream(
         stream, state_root, f"{tmp_dir}/ckpt", key="user_id", group="event_type"
     )
-    q.awaitTermination(120)
+    drain(q)
 
     tbl = SnapshotTable(spark, state_root)
     got = sorted((r.event_type, r.hv) for r in tbl.read().collect())
@@ -691,7 +692,7 @@ def test_kmv_stream_manifest_bounded(spark, tmp_dir):
         key="user_id", group="event_type",
         token_horizon=2, vacuum_every=2,
     )
-    q.awaitTermination(120)
+    drain(q)
 
     tbl = SnapshotTable(spark, state_root)
     assert tbl.snapshot().batch_tokens == ["b3", "b4", "b5"]  # horizon+1 window
@@ -748,7 +749,7 @@ def test_trend_partials_stream_equals_batch(spark, tmp_dir):
     stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
     state_root = f"{tmp_dir}/trend_state"
     q = trend_partials_stream(stream, state_root, f"{tmp_dir}/ckpt")
-    q.awaitTermination(120)
+    drain(q)
 
     tbl = SnapshotTable(spark, state_root)
     batch = spark.read.json(str(src), schema=stream.schema)
@@ -817,7 +818,7 @@ def test_user_type_counts_stream_serves_entropy(spark, tmp_dir):
     stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
     state_root = f"{tmp_dir}/utc_state"
     q = user_type_counts_stream(stream, state_root, f"{tmp_dir}/ckpt")
-    q.awaitTermination(120)
+    drain(q)
 
     tbl = SnapshotTable(spark, state_root)
     got = {(r.user_id, r.event_type): r.c for r in tbl.read().collect()}
@@ -895,7 +896,7 @@ def test_bloom_admission_stream_cross_batch(spark, tmp_dir):
             out_path=f"{tmp_dir}/out",
             checkpoint=ckpt,
         )
-        q.awaitTermination(120)
+        drain(q)
 
     _run(f"{tmp_dir}/ckpt")
     got = {
@@ -952,7 +953,7 @@ def test_bloom_admission_stream_sized_from_index_manifests(spark, tmp_dir):
         checkpoint=f"{tmp_dir}/ckpt",
         size_from_root=f"{tmp_dir}/heldidx",
     )
-    q.awaitTermination(120)
+    drain(q)
     idx = BloomIndex(spark, f"{tmp_dir}/bloomidx")
     assert idx.m_bits == bloom_bits(held.row_count())  # manifest-sized
 
@@ -1004,7 +1005,7 @@ def test_inverted_index_stream_equals_batch(spark, tmp_dir):
             index_root=f"{tmp_dir}/invidx",
             checkpoint=ckpt,
         )
-        q.awaitTermination(120)
+        drain(q)
 
     _run(f"{tmp_dir}/ckpt")
     idx = InvertedIndex(spark, f"{tmp_dir}/invidx")
@@ -1098,7 +1099,7 @@ def test_expectations_gate_stream_publishes_or_quarantines(spark, tmp_dir):
             quarantine_path=f"{tmp_dir}/quarantine",
             checkpoint=ckpt,
         )
-        q.awaitTermination(120)
+        drain(q)
 
     _run(f"{tmp_dir}/ckpt")
     t = SnapshotTable(spark, f"{tmp_dir}/gated")
@@ -1179,7 +1180,7 @@ def test_cdc_apply_stream_out_of_order_and_fold(spark, tmp_dir):
             key="id",
             order_col="ord",
         )
-        q.awaitTermination(120)
+        drain(q)
 
     _run(f"{tmp_dir}/ckpt")
     t = SnapshotTable(spark, f"{tmp_dir}/fact")
@@ -1254,7 +1255,7 @@ def test_target_encoder_stream_equals_batch(spark, tmp_dir):
     q = target_encoder_stream(
         stream, cust, state_root, f"{tmp_dir}/ckpt"
     )
-    q.awaitTermination(120)
+    drain(q)
 
     tbl = SnapshotTable(spark, state_root)
     batch = spark.read.json(str(src), schema=schema)

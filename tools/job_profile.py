@@ -5,8 +5,11 @@ launch, and where does the wall time go?
 Usage: python tools/job_profile.py [--runs 2] [--sf-dir ...] name...
 
 Job ids come from the status tracker (works with spark.ui.enabled
-false): the delta of ``getJobIdsForGroup(None)`` across the execution.
-One JSON line per query: {"query", "jobs", "wall", "cpu", ...}.
+false): a query's jobs are the job-id range its execution spans, so
+jobs started from threads without the caller's job group (a
+foreachBatch stream thread) count too. Job ids count up from 0, so the
+newest id is found by walking up from the newest one seen. One JSON line per query:
+{"query", "jobs", "wall", "cpu", ...}.
 """
 
 from __future__ import annotations
@@ -44,8 +47,17 @@ def main() -> None:
     from event_to_lakehouse_spark.session import get_spark
 
     spark = get_spark("job-profile")
-    spark.sparkContext.setLogLevel("ERROR")
-    tracker = spark.sparkContext.statusTracker()
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    tracker = sc.statusTracker()
+
+    def last_job_id(after: int) -> int:
+        j = max([after, *tracker.getJobIdsForGroup(None)])
+        while tracker.getJobInfo(j + 1) is not None:
+            j += 1
+        return j
+
+    last = -1
 
     for name in names:
         fn = QUERIES.get(name)
@@ -58,18 +70,21 @@ def main() -> None:
             out = {"query": name, "jobs": [], "wall": [], "cpu": []}
             for r in range(runs):
                 group = f"jobprofile:{name}:{r}"
-                spark.sparkContext.setJobGroup(group, group)
-                c0 = bench._tree_cpu_sec()
-                t0 = time.time()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                out["wall"].append(round(time.time() - t0, 3))
-                out["cpu"].append(round(bench._tree_cpu_sec() - c0, 3))
-                out["jobs"].append(len(tracker.getJobIdsForGroup(group)))
+                sc.setJobGroup(group, group)
+                try:
+                    j0 = last = last_job_id(last)
+                    c0 = bench._tree_cpu_sec()
+                    t0 = time.time()
+                    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                    out["wall"].append(round(time.time() - t0, 3))
+                    out["cpu"].append(round(bench._tree_cpu_sec() - c0, 3))
+                    last = last_job_id(j0)
+                    out["jobs"].append(last - j0)
+                finally:
+                    sc.setJobGroup(None, None)  # clear, not an empty group
             print(json.dumps(out), flush=True)
         except Exception as e:
             print(json.dumps({"query": name, "err": str(e)[:200]}), flush=True)
-        finally:
-            spark.sparkContext.setJobGroup("", "")
 
 
 if __name__ == "__main__":
